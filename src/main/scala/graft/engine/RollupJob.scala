@@ -1,9 +1,13 @@
 package graft.engine
 
+import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService,
+  Executors, Future => JFuture, TimeUnit}
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{dod_encode, gorilla_encode, FeatureParams}
+import graft.functions.{dod_encode, gorilla_encode}
 import graft.table.TableIO
 
 /** The spark-submit entry for the tiered rollup: token table in, per-tier
@@ -14,9 +18,21 @@ import graft.table.TableIO
   * - Commit unit = UTC day; resume = days absent from the manifest
   *   (idempotent: immutable snapshot dirs + last-commit-wins).
   * - Every tier row stores BOTH the finalized features and the mergeable
-  *   state struct `P`, so a resumed run cascades from committed points
+  *   state struct `P`, so a coarser tier cascades from finer states
   *   without touching raw data — the incremental re-aggregation the
   *   north rule asks for.
+  * - Stage, then publish. A run first builds every tier's fresh
+  *   bucket-states (tier T+1 cascades from tier T's persisted fresh
+  *   states; only days already committed at T are read back from the
+  *   table), then stages all tiers' feature writes, chunk writes and
+  *   lineage collects concurrently (a tier's collect fills its cache
+  *   before its writes and the coarser tier's collect read it), then
+  *   publishes them in manifest order: per tier features -> lineage ->
+  *   chunks, tiers finest first.
+  *   In that order a crash can at worst duplicate lineage on the re-run,
+  *   never leave a done day without lineage rows; a failed staging
+  *   publishes nothing. The run holds the table's commit lock
+  *   throughout, so writers on the same root serialize.
   * - Lineage rows per (tier, day): rows/tokens in, points out, checksum.
   * - Compressed chunks: per (source, day) the bucket timestamps are
   *   delta-of-delta coded and each feature series Gorilla-coded.
@@ -47,56 +63,132 @@ object RollupJob {
   private def dayOf(c: org.apache.spark.sql.Column) =
     floor(unix_timestamp(c) / 86400L).cast("long") * 86400L
 
+  private val StateCols = Seq("source", "bucket", "P", "rows_in", "tokens_in").map(col)
+
+  /** One tier's pending days and their fresh bucket-states (None when
+    * nothing is pending). */
+  private final case class TierPlan(tier: String, pending: Seq[Long],
+                                    states: Option[DataFrame])
+
+  /** Spark actions run concurrently, each on its own pool thread under
+    * one job group. `awaitAll` returns once all succeeded; on the first
+    * failure it cancels the group (and any job the group submits later),
+    * gives the siblings a bounded time to unwind, and rethrows. */
+  private final class Concurrently(sc: SparkContext, group: String) {
+    private val pool = Executors.newCachedThreadPool()
+    private val done = new ExecutorCompletionService[Any](pool)
+    private var submitted = 0
+
+    def apply[T](body: => T): JFuture[T] = {
+      submitted += 1
+      done.submit(new Callable[Any] {
+        def call(): Any = {
+          sc.setJobGroup(group, group)
+          try body finally sc.clearJobGroup()
+        }
+      }).asInstanceOf[JFuture[T]]
+    }
+
+    /** `body`, started once `dep` has succeeded; a failed `dep` fails this
+      * action with the same cause. */
+    def after[T](dep: Option[JFuture[_]])(body: => T): JFuture[T] = apply {
+      dep.foreach(d => try d.get() catch { case e: ExecutionException => throw e.getCause })
+      body
+    }
+
+    def awaitAll(): Unit = try {
+      var left = submitted
+      while (left > 0) {
+        val f = done.take()
+        left -= 1
+        try f.get()
+        catch {
+          case e: ExecutionException =>
+            sc.cancelJobGroupAndFutureJobs(group)
+            // cancelled jobs end promptly; the bound only guards a sibling
+            // stuck outside Spark (a footer read)
+            val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+            while (left > 0 &&
+              done.poll(deadline - System.nanoTime(), TimeUnit.NANOSECONDS) != null)
+              left -= 1
+            throw e.getCause
+        }
+      }
+    } finally pool.shutdownNow()
+  }
+
   /** Run (or resume) the full cascade. */
   def run(spark: SparkSession, tokens: DataFrame, conf: Conf): Seq[TierResult] = {
     val io = new TableIO(conf.tableRoot, conf.manifestCheckpointEvery)
-    val allDays = tokens.select(dayOf(col("event_time")).as("d"))
-      .distinct().collect().map(_.getLong(0)).sorted.toSeq
-
     // every persist() this run makes is released before returning —
     // repeated run() calls on one session (the resume pattern) otherwise
     // accumulate dead cached blocks for the session's lifetime
     val cachedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var statesRef: Option[DataFrame] = None
-    def states: DataFrame = statesRef.getOrElse {
-      val s = TokenRollup.rowStates(tokens, conf.scale)
-        .withColumn("day", dayOf(col("event_time")))
-        .persist()
-      statesRef = Some(s)
-      s
+    def persisted(df: DataFrame): DataFrame = {
+      val p = df.persist()
+      cachedFrames += p
+      p
     }
+    try io.locked {
+      val allDays = tokens.select(dayOf(col("event_time")).as("d"))
+        .distinct().collect().map(_.getLong(0)).sorted.toSeq
+      lazy val states = persisted(TokenRollup.rowStates(tokens, conf.scale)
+        .withColumn("day", dayOf(col("event_time"))))
 
-    val results = scala.collection.mutable.ArrayBuffer.empty[TierResult]
-    // bucket-states of the previous (finer) tier covering ALL days
-    var finer: Option[DataFrame] = None
-
-    conf.tiers.zipWithIndex.foreach { case ((tierName, win), tierIdx) =>
-      // A day is done only when BOTH of its commits landed (features, then
-      // chunks). A crash between the two leaves the day pending, so the
-      // resume re-runs it — the feature re-commit is last-commit-wins on
-      // the same bucket, keeping the documented idempotence contract.
-      val done = io.doneBuckets(tierName)
-        .intersect(io.doneBuckets(s"$tierName-chunks"))
-      val pending = allDays.filterNot(done.contains)
-
-      val fresh: Option[DataFrame] = if (pending.isEmpty) None else Some {
-        val src = finer match {
-          case Some(fs) =>
-            TokenRollup.cascade(
-              fs.where(dayOf(col("bucket")).isin(pending: _*)), win)
-          case None =>
-            TokenRollup.mergeToBuckets(
-              states.where(col("day").isin(pending: _*)),
-              win, Seq("event_time", "doc_id"))
-        }
-        val p = src.persist()
-        cachedFrames += p
-        p
+      // 1. every tier's fresh bucket-states, before anything is published
+      val plans = conf.tiers.foldLeft(Vector.empty[TierPlan]) {
+        case (acc, (tierName, win)) =>
+          // A day is done only when BOTH of its commits landed (features,
+          // then chunks). A crash between the two leaves the day pending,
+          // so the resume re-runs it — the feature re-commit is
+          // last-commit-wins on the same bucket, keeping the documented
+          // idempotence contract.
+          val done = io.doneBuckets(tierName)
+            .intersect(io.doneBuckets(s"$tierName-chunks"))
+          val pending = allDays.filterNot(done.contains)
+          // the finer tier's states for these days: its fresh states where
+          // it is pending too, else (crash repair: done at the finer tier,
+          // pending here) its committed rows, read manifest-pruned
+          val finer = acc.lastOption.flatMap { f =>
+            val (shared, repair) = pending.partition(f.pending.contains)
+            val fresh = if (shared.isEmpty) None else f.states.map(
+              _.where(dayOf(col("bucket")).isin(shared: _*)).select(StateCols: _*))
+            val committed = if (repair.isEmpty) None else
+              io.readRange(spark, f.tier, repair.min, repair.max + 1).map(
+                _.where(col("commit_bucket").isin(repair: _*)).select(StateCols: _*))
+            (fresh ++ committed).reduceOption(_ unionByName _)
+          }
+          acc :+ TierPlan(tierName, pending, if (pending.isEmpty) None else Some(
+            persisted(finer match {
+              case Some(fs) => TokenRollup.cascade(fs, win)
+              // no finer input at all (first tier, or nothing visible)
+              case None =>
+                TokenRollup.mergeToBuckets(states.where(col("day").isin(pending: _*)),
+                  win, Seq("event_time", "doc_id"))
+            })))
       }
 
-      fresh.foreach { bucketStates =>
+      // 2. stage every tier's lineage and writes concurrently, in a fixed
+      // pipeline: a tier's lineage collect is the first action over its
+      // persisted states and starts only after the finer tier's collect
+      // has filled that tier's cache; its two writes start after it. So
+      // each cache is computed by one job, never by racing consumers, and
+      // a tier's writes overlap the coarser tiers' collects.
+      val group = s"graft-rollup-${conf.jobId}-${java.util.UUID.randomUUID()}"
+      val stage = new Concurrently(spark.sparkContext, group)
+      var finerLineage: Option[JFuture[_]] = None
+      val staged = plans.map(p => p.states.map { bucketStates =>
         val feats = TokenRollup.finalizeFeatures(bucketStates)
           .withColumn("commit_bucket", dayOf(col("bucket")))
+        val lineage = stage.after(finerLineage)(feats.groupBy(col("commit_bucket"))
+          .agg(count(lit(1)).as("points"), sum("tokens_in").as("tokens"),
+            sum(hash(col("source"), col("bucket"),
+              graft.functions.duckRound(col("mean"), 9)).cast("long")).as("chk"))
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1),
+            if (r.isNullAt(2)) 0L else r.getLong(2), r.getLong(3).toHexString))
+          .toSeq)
+        finerLineage = Some(lineage)
         // REBALANCE before the partitioned write (guide: output file
         // sizing): without it every upstream task writes a sliver into
         // every source dir — ~(tasks x sources) tiny files per snapshot,
@@ -106,29 +198,8 @@ object RollupJob {
         // yields size-targeted files — the Iceberg write.distribution-mode
         // = hash behaviour, at the documented cost of one extra exchange
         // of the (metadata-sized) tier output
-        // the lineage aggregation and the feature commit's write are
-        // independent jobs over the same persisted bucket-states — start
-        // the lineage collect FIRST so its tasks overlap the commit write
-        // (Spark runs driver-submitted jobs in parallel; actions are only
-        // sequential when the driver calls them sequentially). The append
-        // itself stays in the r5 order — after the feature commit, BEFORE
-        // the chunks commit — so a crash can at worst duplicate lineage on
-        // the re-run, never leave a done day without lineage rows.
-        val linF = scala.concurrent.Future {
-          feats.groupBy(col("commit_bucket"))
-            .agg(count(lit(1)).as("points"), sum("tokens_in").as("tokens"),
-              sum(hash(col("source"), col("bucket"),
-                graft.functions.duckRound(col("mean"), 9)).cast("long")).as("chk"))
-            .collect()
-            .map(r => (r.getLong(0), r.getLong(1),
-              if (r.isNullAt(2)) 0L else r.getLong(2), r.getLong(3).toHexString))
-        }(scala.concurrent.ExecutionContext.global)
-        io.commit(tierName, feats.hint("rebalance", "source"), pending,
-          conf.jobId)
-        val lin = scala.concurrent.Await.result(linF,
-          scala.concurrent.duration.Duration.Inf)
-        io.appendLineage(conf.jobId, tierName, lin.toSeq)
-
+        val featsW = stage.after(Some(lineage))(
+          io.stage(p.tier, feats.hint("rebalance", "source")))
         val ordered = feats
           .withColumn("bs", unix_timestamp(col("bucket")))
           .groupBy(col("source"), col("commit_bucket"))
@@ -139,61 +210,48 @@ object RollupJob {
             dod_encode(col("pts.bs")).as("ts_dod")) ++
             conf.chunkFeatures.map(c =>
               gorilla_encode(col(s"pts.$c")).as(s"${c}_gor")): _*)
-        io.commit(s"$tierName-chunks", chunks, pending, conf.jobId)
-        // tier point count = the lineage rows' points summed — the former
-        // bucketStates.count() ran one more Spark job per tier to restate
-        // what the lineage aggregation already knows
-        results += TierResult(tierName, pending, lin.map(_._2).sum)
-      }
-      if (fresh.isEmpty) results += TierResult(tierName, Nil, 0)
+        val chunksW = stage.after(Some(lineage))(io.stage(s"${p.tier}-chunks", chunks))
+        (featsW, lineage, chunksW)
+      })
+      stage.awaitAll()
 
-      // full bucket-state view of this tier for the next cascade:
-      // committed days from the manifest + freshly computed days. Only
-      // built when a coarser tier will actually consume it — for the last
-      // tier it is dead work (a manifest resolve + per-snapshot parquet
-      // schema read per run). Positional, not by name: a duplicated tier
-      // name must not skip an interior tier's view.
-      if (tierIdx != conf.tiers.size - 1) {
-        val committedStates = io.read(spark, tierName).map { df =>
-          df.where(!col("commit_bucket").isin(pending: _*))
-            .select(col("source"), col("bucket"), col("P"),
-              col("rows_in"), col("tokens_in"))
-        }
-        val freshStates = fresh.map(_.select(col("source"), col("bucket"),
-          col("P"), col("rows_in"), col("tokens_in")))
-        finer = (committedStates, freshStates) match {
-          case (Some(a), Some(b)) => Some(a.unionByName(b))
-          case (a, b) => a.orElse(b)
+      // 3. publish in manifest order
+      val results = plans.zip(staged).map { case (p, writes) =>
+        writes.fold(TierResult(p.tier, Nil, 0)) {
+          case (featsW, lineage, chunksW) =>
+            io.publish(featsW.get(), p.pending, conf.jobId)
+            io.appendLineage(conf.jobId, p.tier, lineage.get())
+            io.publish(chunksW.get(), p.pending, conf.jobId)
+            // tier point count = the lineage rows' points summed
+            TierResult(p.tier, p.pending, lineage.get().map(_._2).sum)
         }
       }
-    }
-    // Retention. The cascade above guarantees coarser coverage only for
-    // days in THIS run's input — doneBuckets can hold older days whose
-    // coarser commits crashed in a previous run and whose data never
-    // reappeared in an input since. Expiring such a day would vacuum the
-    // only source a future 1d repair could cascade from (silent loss), so
-    // the cutoff is clamped to the coarser tiers' covered prefix: a fine
-    // day expires only when every coarser tier (features AND chunks) has
-    // it committed.
-    conf.retention.foreach { case (tierName, horizon) =>
-      val days = io.doneBuckets(tierName)
-      val coarser = conf.tiers.map(_._1).dropWhile(_ != tierName).drop(1)
-      if (days.nonEmpty) {
-        val covered = coarser.foldLeft(days) { (acc, t) =>
-          acc.intersect(io.doneBuckets(t))
-            .intersect(io.doneBuckets(s"$t-chunks"))
+
+      // Retention. The cascade above guarantees coarser coverage only for
+      // days in THIS run's input — doneBuckets can hold older days whose
+      // coarser commits crashed in a previous run and whose data never
+      // reappeared in an input since. Expiring such a day would vacuum the
+      // only source a future 1d repair could cascade from (silent loss), so
+      // the cutoff is clamped to the coarser tiers' covered prefix: a fine
+      // day expires only when every coarser tier (features AND chunks) has
+      // it committed.
+      conf.retention.foreach { case (tierName, horizon) =>
+        val days = io.doneBuckets(tierName)
+        val coarser = conf.tiers.map(_._1).dropWhile(_ != tierName).drop(1)
+        if (days.nonEmpty) {
+          val covered = coarser.foldLeft(days) { (acc, t) =>
+            acc.intersect(io.doneBuckets(t))
+              .intersect(io.doneBuckets(s"$t-chunks"))
+          }
+          val uncovered = days.diff(covered)
+          val cutoff = math.min(days.max - horizon,
+            uncovered.minOption.getOrElse(Long.MaxValue))
+          io.expire(tierName, cutoff)
+          io.expire(s"$tierName-chunks", cutoff)
         }
-        val uncovered = days.diff(covered)
-        val cutoff = math.min(days.max - horizon,
-          uncovered.minOption.getOrElse(Long.MaxValue))
-        io.expire(tierName, cutoff)
-        io.expire(s"$tierName-chunks", cutoff)
       }
-    }
-    // all commits are on disk; nothing lazy escapes this method
-    cachedFrames.foreach(_.unpersist(blocking = false))
-    statesRef.foreach(_.unpersist(blocking = false))
-    results.toSeq
+      results
+    } finally cachedFrames.foreach(_.unpersist(blocking = false))
   }
 
   def main(args: Array[String]): Unit = {

@@ -348,8 +348,9 @@ object MediaCodecs {
       // reaching finished = missing final block, equally malformed.
       if (!inf.finished()) {
         val probe = new Array[Byte](1)
-        require(inf.inflate(probe) == 0 && inf.finished(),
+        require(inf.inflate(probe) == 0,
           "IDAT inflates beyond the declared raster")
+        require(inf.finished(), "truncated IDAT stream: no final deflate block")
       }
       // ...and nothing may FOLLOW the zlib stream inside IDAT either — a
       // payload with trailing junk after the stream end is just as

@@ -14,25 +14,37 @@ import org.apache.spark.sql.functions._
   *
   * Layout:
   *   root/data/<tier>/snap-<id>/   parquet (partitioned by source), immutable
+  *   root/data/<tier>/_staging/    writes not yet published (see below)
   *   root/meta/snapshots.jsonl     one JSON object per committed snapshot
   *                                 or retention tombstone, append-only
   *   root/meta/checkpoint.jsonl    compaction of the log prefix (see below)
   *   root/meta/lineage.jsonl       per-(snapshot, bucket) lineage rows
   *
-  * Commit protocol: write parquet to `<dir>.tmp`, atomic-rename to the
-  * final dir, then append the snapshot line (newline-sealed + fsynced —
-  * the manifest append IS the commit point). A crash before the manifest
-  * append leaves an orphan directory that no reader ever sees (reads
-  * resolve strictly through the manifest); the retry reclaims the orphan
-  * and re-runs the bucket idempotently. A torn manifest tail (crash
-  * mid-append) is skipped on read and sealed on the next append. Commits
-  * across processes serialize on a file lock (snapshot ids are allocated
-  * under it); within one JVM, writers on the same root serialize on a
-  * process-wide monitor first, so two TableIO instances never race into
-  * `FileChannel.lock` (which throws OverlappingFileLockException rather
-  * than blocking for same-JVM overlap). Resume = input buckets minus
-  * `doneBuckets` (the manifest high-water-mark); last-commit-wins on
-  * bucket collisions.
+  * Commit protocol, in two steps.
+  *   - Stage: the Spark write goes to `data/<tier>/_staging/<uuid>/` and
+  *     its row count is read from the parquet footers. No manifest line
+  *     names a staging dir, and reads resolve strictly through the
+  *     manifest, so a staged write is invisible.
+  *   - Publish: allocate the snapshot id, atomic-rename the staged dir to
+  *     `snap-<id>`, then append the snapshot line (newline-sealed +
+  *     fsynced — the manifest append IS the commit point).
+  * `commit` is stage then publish. A writer that stages several tiers at
+  * once (RollupJob) holds the commit lock through `locked` across all of
+  * its stages and publishes; its staging threads take neither this
+  * instance's monitor nor the lock. So every staging dir belongs to the
+  * current lock holder, and any staging dir found when the lock is taken
+  * is a leftover of a crashed or failed writer and is reclaimed.
+  *
+  * A crash before the manifest append leaves an orphan directory that no
+  * reader ever sees; the retry reclaims the orphan and re-runs the bucket
+  * idempotently. A torn manifest tail (crash mid-append) is skipped on
+  * read and sealed on the next append. Commits across processes
+  * serialize on a file lock (snapshot ids are allocated under it); within
+  * one JVM, writers on the same root serialize on a process-wide monitor
+  * first, so two TableIO instances never race into `FileChannel.lock`
+  * (which throws OverlappingFileLockException rather than blocking for
+  * same-JVM overlap). Resume = input buckets minus `doneBuckets` (the
+  * manifest high-water-mark); last-commit-wins on bucket collisions.
   *
   * Checkpoint compaction: the manifest is append-only forever, so a
   * naive reader's cost grows with the table's whole commit history. Every
@@ -308,7 +320,9 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     * in this JVM already holds the file's lock. Re-entrant per thread
     * (tracked by canonical root), so a multi-step maintenance op like
     * compact() can hold the lock across resolve→rewrite→commit→vacuum
-    * while the inner steps still guard themselves when called directly. */
+    * while the inner steps still guard themselves when called directly.
+    * Taking the lock afresh reclaims staging leftovers: a live staging
+    * dir only ever exists under a held lock. */
   private def withCommitLock[T](body: => T): T =
     TableIO.rootMonitor(root).synchronized {
       val key = Paths.get(root).toAbsolutePath.normalize.toString
@@ -319,7 +333,7 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
         try {
           val lock = ch.lock()
           TableIO.heldLocks.get.add(key)
-          try body finally {
+          try { reclaimStaging(); body } finally {
             TableIO.heldLocks.get.remove(key)
             lock.release()
           }
@@ -387,8 +401,7 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     * coarser tier has committed the covered range, because expired
     * buckets cannot seed a future cascade. */
   def expire(tier: String, cutoff: Long): Unit = synchronized {
-    Files.createDirectories(metaDir)
-    withCommitLock {
+    locked {
       val st = readLog()
       val cur = st.cutoffs.getOrElse(tier, Long.MinValue)
       if (cutoff > cur) {
@@ -404,9 +417,41 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     }
   }
 
-  /** Atomically commit a tier DataFrame covering `buckets`. */
-  def commit(tier: String, df: DataFrame, buckets: Seq[Long], jobId: String,
-             partitionBy: Seq[String] = Seq("source")): Snapshot = synchronized {
+  /** Delete every `data/<tier>/_staging` dir. Only called on taking the
+    * commit lock, when none of them can belong to a live writer. */
+  private def reclaimStaging(): Unit = {
+    val data = Paths.get(root, "data")
+    if (Files.isDirectory(data)) {
+      val tiers = Files.list(data)
+      try tiers.forEach { t =>
+        val staging = t.resolve(TableIO.StagingDir)
+        if (Files.isDirectory(staging)) deleteRec(staging)
+      } finally tiers.close()
+    }
+  }
+
+  /** A tier write parked in a staging dir, not yet visible. */
+  final case class Staged(tier: String, dir: Path, rows: Long)
+
+  /** Run `body` holding the commit lock (re-entrant), so a writer can
+    * stage several tiers and publish them with no other writer on this
+    * root in between. Takes the process-wide root monitor but not this
+    * instance's monitor. */
+  private[graft] def locked[T](body: => T): T = {
+    Files.createDirectories(metaDir)
+    withCommitLock(body)
+  }
+
+  /** Spark-write `df` into a fresh staging dir of `tier` and count its
+    * rows from the footers. The plan is evaluated ONCE: emptiness comes
+    * from what was actually written (a separate isEmpty action would
+    * re-execute the plan and could disagree with the written data for
+    * nondeterministic inputs). Takes neither this instance's monitor nor
+    * the commit lock, so a lock holder may stage from pool threads; the
+    * caller must hold the lock (`locked`), or the next lock taker
+    * reclaims the staging dir. */
+  private[graft] def stage(tier: String, df: DataFrame,
+                           partitionBy: Seq[String] = Seq("source")): Staged = {
     // tier names become filesystem paths — keep them path- and JSON-safe
     require(tier.matches("[A-Za-z0-9._-]+"),
       s"tier '$tier' must match [A-Za-z0-9._-]+")
@@ -414,48 +459,58 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     // column at write time instead of failing at read time
     require(df.columns.contains("commit_bucket"),
       s"commit('$tier'): DataFrame must carry a commit_bucket column")
-    Files.createDirectories(metaDir)
-    withCommitLock {
-    val st = readLog()
-    val id = st.maxId + 1
-    // A bucket can legitimately finalize to zero rows (every input row
-    // below the state minimum): record it in the manifest (it IS done —
-    // resume must not re-run it forever) but write no data directory
-    // (a 0-row partitioned parquet write has no readable footer).
-    // The plan is evaluated ONCE — write to tmp first, then derive
-    // emptiness from what was actually written (a separate isEmpty action
-    // would re-execute the plan and could disagree with the written data
-    // for nondeterministic inputs).
-    val snapRel = s"data/$tier/snap-$id"
-    val finalDir = Paths.get(root, snapRel)
-    val tmpDir = Paths.get(root, snapRel + ".tmp")
-    Files.createDirectories(finalDir.getParent)
+    val dir = Paths.get(root, "data", tier, TableIO.StagingDir,
+      java.util.UUID.randomUUID().toString)
+    Files.createDirectories(dir.getParent)
     val writer = if (partitionBy.nonEmpty) df.write.partitionBy(partitionBy: _*) else df.write
-    writer.mode("overwrite").parquet(tmpDir.toString)
+    writer.mode("overwrite").parquet(dir.toString)
     // exact row count from the written parquet FOOTERS (driver-side,
     // O(files)) — the former spark.read(...).count() launched a full
     // second Spark scan job per commit just to fill snapshot metadata
-    val rows = countParquetRows(tmpDir)
-    val relDir = if (rows == 0L) {
-      deleteRec(tmpDir)
-      ""
-    } else {
-      // a crash between this rename and the manifest append leaves an
-      // orphan snap-<id> dir that no reader ever sees; the retry
-      // recomputes the same id, so reclaim the orphan instead of letting
-      // ATOMIC_MOVE fail on the non-empty target forever
-      if (Files.exists(finalDir)) deleteRec(finalDir)
-      Files.move(tmpDir, finalDir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      snapRel
+    Staged(tier, dir, countParquetRows(dir))
+  }
+
+  /** Make a staged write visible as a snapshot covering `buckets`:
+    * allocate its id, rename the staged dir to `snap-<id>`, append the
+    * manifest line (the commit point). */
+  private[graft] def publish(staged: Staged, buckets: Seq[Long],
+                             jobId: String): Snapshot = synchronized {
+    locked {
+      val st = readLog()
+      val id = st.maxId + 1
+      // A bucket can legitimately finalize to zero rows (every input row
+      // below the state minimum): record it in the manifest (it IS done —
+      // resume must not re-run it forever) but keep no data directory
+      // (a 0-row partitioned parquet write has no readable footer).
+      val snapRel = s"data/${staged.tier}/snap-$id"
+      val relDir = if (staged.rows == 0L) {
+        deleteRec(staged.dir)
+        ""
+      } else {
+        // a crash between this rename and the manifest append leaves an
+        // orphan snap-<id> dir that no reader ever sees; the retry
+        // recomputes the same id, so reclaim the orphan instead of letting
+        // ATOMIC_MOVE fail on the non-empty target forever
+        val finalDir = Paths.get(root, snapRel)
+        if (Files.exists(finalDir)) deleteRec(finalDir)
+        Files.move(staged.dir, finalDir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        snapRel
+      }
+      val snap = Snapshot(id, staged.tier, relDir, buckets, staged.rows, jobId,
+        System.currentTimeMillis())
+      appendDurable(snapshotsFile, snapJson(snap) + "\n")
+      if (st.tailLines + 1 >= checkpointEvery)
+        writeCheckpointLocked(st.copy(snaps = st.snaps :+ snap, maxId = id,
+          tailLines = st.tailLines + 1))
+      snap
     }
-    val snap = Snapshot(id, tier, relDir, buckets, rows, jobId,
-      System.currentTimeMillis())
-    appendDurable(snapshotsFile, snapJson(snap) + "\n")
-    if (st.tailLines + 1 >= checkpointEvery)
-      writeCheckpointLocked(st.copy(snaps = st.snaps :+ snap, maxId = id,
-        tailLines = st.tailLines + 1))
-    snap
-    }
+  }
+
+  /** Atomically commit a tier DataFrame covering `buckets`: stage, then
+    * publish, under one hold of the commit lock. */
+  def commit(tier: String, df: DataFrame, buckets: Seq[Long], jobId: String,
+             partitionBy: Seq[String] = Seq("source")): Snapshot = synchronized {
+    locked { publish(stage(tier, df, partitionBy), buckets, jobId) }
   }
 
   /** Read a tier through the manifest: union of committed snapshot dirs,
@@ -482,15 +537,21 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     // skip snapshots serving nothing — their dir may already be vacuumed
     val kept = snaps.map(s => s.id -> kept0(s.id)
       .filter(b => b >= fromBucket && b < untilBucket)).toMap
-    val dfs = snaps.filter(s => s.dir.nonEmpty && kept(s.id).nonEmpty).map { s =>
-      val df = spark.read.parquet(Paths.get(root, s.dir).toString)
-      // ALWAYS filter to the surviving winning buckets — skipping the
-      // filter when keep == declared let rows whose commit_bucket was
-      // never declared leak past last-commit-wins (commit() does not
-      // validate the data's buckets against the declared list)
+    val live = snaps.filter(s => s.dir.nonEmpty && kept(s.id).nonEmpty)
+    if (live.isEmpty) return None
+    def path(s: Snapshot) = Paths.get(root, s.dir).toString
+    // schema inference runs a Spark job per parquet read: infer once and
+    // hand the schema to the other snapshots (unionByName already needs
+    // every snapshot of a tier to share it)
+    val first = spark.read.parquet(path(live.head))
+    val dfs = first +: live.tail.map(s => spark.read.schema(first.schema).parquet(path(s)))
+    // ALWAYS filter to the surviving winning buckets — skipping the
+    // filter when keep == declared let rows whose commit_bucket was
+    // never declared leak past last-commit-wins (commit() does not
+    // validate the data's buckets against the declared list)
+    Some(live.zip(dfs).map { case (s, df) =>
       df.where(col("commit_bucket").isin(kept(s.id): _*))
-    }
-    if (dfs.isEmpty) None else Some(dfs.reduce(_ unionByName _))
+    }.reduce(_ unionByName _))
   }
 
   /** Bin-pack a tier's live snapshots into one: the small-file
@@ -516,8 +577,7 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     // losing committed data. Lock-hold length equals an ordinary
     // commit's (which also holds it across its Spark write).
     synchronized {
-      Files.createDirectories(metaDir)
-      withCommitLock {
+      locked {
         read(spark, tier).map { df =>
           val buckets = {
             val st = readLog()
@@ -585,6 +645,9 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
 }
 
 object TableIO {
+  // per-tier dir of unpublished writes; the leading '_' keeps Spark's
+  // file listing from treating it as data should a tier dir be read
+  private val StagingDir = "_staging"
   // one Configuration for all footer reads — each instantiation reloads
   // the XML default resources, which would tax every commit
   private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()

@@ -166,6 +166,53 @@ class HardeningSpec extends AnyFunSuite {
     assert(readBack.select(countDistinct(col("commit_bucket"))).head.getLong(0) == 2)
   }
 
+  /** Run a rollup whose `failing` tier cannot stage (a plain file sits
+    * where its directory belongs) and check that it rethrows, leaves no
+    * Spark job running, publishes nothing, and that the actions staged
+    * after the failure (found under `cancelled`) were cancelled rather
+    * than waited out: none got as far as its job commit, which leaves a
+    * _SUCCESS marker. */
+  private def failedStaging(failing: String, cancelled: Seq[String]): Unit = {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_fail").toString
+    val tok = (0 until 96).map { i =>
+      val ts = java.sql.Timestamp.valueOf(s"2024-01-0${i / 24 + 1} ${i % 24}:00:00")
+      (s"d$i", Array.tabulate(64)(j => i * 100 + j * j % 7), 64, s"s${i % 3}", ts)
+    }.toDF("doc_id", "tokens", "n_tok", "source", "event_time")
+    Files.createDirectories(Paths.get(root, "data"))
+    Files.write(Paths.get(root, "data", failing), Array[Byte](1))
+    val err = intercept[java.io.IOException](graft.engine.RollupJob.run(spark, tok,
+      graft.engine.RollupJob.Conf(tableRoot = root, scale = 1.0, jobId = "fail")))
+    assert(err.getMessage.contains(failing), err.getMessage)
+    cancelled.map(t => Paths.get(root, "data", t)).filter(Files.exists(_)).foreach { d =>
+      val files = Files.walk(d)
+      try assert(!files.anyMatch(_.getFileName.toString == "_SUCCESS"),
+        s"a staged write under $d ran to completion")
+      finally files.close()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.SparkTestHooks.drainListeners(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty, "a staged job outlived the run")
+    val io = new TableIO(root)
+    assert(io.snapshots().isEmpty && io.lineageLines().isEmpty,
+      "a failed run published")
+    assert(!Files.exists(Paths.get(root, "meta", "snapshots.jsonl")))
+  }
+
+  // the last tier's chunk write fails last in the run: its features write,
+  // staged alongside it, is cancelled
+  test("RollupJob: a failed staging cancels the run's Spark jobs and " +
+    "publishes nothing") {
+    failedStaging("1d-chunks", cancelled = Seq("1d"))
+  }
+
+  // the first tier's chunk write fails first: its features write and every
+  // coarser tier's action are cancelled or never start
+  test("RollupJob: a failed first-tier staging cancels every later action") {
+    failedStaging("1m-chunks", cancelled = Seq("1m", "1h", "1h-chunks", "1d", "1d-chunks"))
+  }
+
   test("kmeansCentroids: deterministic, k cells, unit-ish centroids") {
     val emb = AnnOps.embeddings(spark, sfDir)
     val c1 = AnnOps.kmeansCentroids(emb, 8)

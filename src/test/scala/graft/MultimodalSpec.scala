@@ -215,6 +215,23 @@ class MultimodalSpec extends AnyFunSuite {
     val trailErr = intercept[IllegalArgumentException](
       MediaCodecs.decodePng(trailPng))
     assert(trailErr.getMessage.contains("trailing bytes"))
+    // a stream that yields exactly the raster but never reaches its final
+    // deflate block (sync-flushed, never finished) is truncated, not
+    // oversized
+    val defl4 = new java.util.zip.Deflater()
+    defl4.setInput(exactRaw)
+    val bos4 = new java.io.ByteArrayOutputStream()
+    var flushed = tmp.length
+    while (flushed == tmp.length) {
+      flushed = defl4.deflate(tmp, 0, tmp.length, java.util.zip.Deflater.SYNC_FLUSH)
+      bos4.write(tmp, 0, flushed)
+    }
+    defl4.end()
+    val openPng = good.take(ihdrEnd) ++ chunk("IDAT", bos4.toByteArray) ++
+      chunk("IEND", Array.emptyByteArray)
+    val openErr = intercept[IllegalArgumentException](
+      MediaCodecs.decodePng(openPng))
+    assert(openErr.getMessage.contains("truncated IDAT stream"), openErr.getMessage)
     // and through the pipeline they land on the fallback row
     import spark.implicits._
     import graft.operators.MultimodalOps.Media

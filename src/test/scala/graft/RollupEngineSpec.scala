@@ -109,6 +109,13 @@ class RollupEngineSpec extends AnyFunSuite {
     val ioA = new TableIO(rootA)
     val m1 = ioA.read(spark, "1m").get
     assert(m1.count() > 0)
+    // publish order: per tier features then chunks, finest tier first,
+    // with each tier's lineage appended between its two commits
+    assert(ioA.snapshots().map(s => s.id -> s.tier) == Seq(1L -> "1m",
+      2L -> "1m-chunks", 3L -> "1h", 4L -> "1h-chunks", 5L -> "1d", 6L -> "1d-chunks"))
+    assert(ioA.lineageLines().map(l => l.substring(l.indexOf("\"tier\""))
+      .takeWhile(_ != ',')).distinct ==
+      Seq("\"tier\":\"1m\"", "\"tier\":\"1h\"", "\"tier\":\"1d\""))
 
     // chunk round-trip: decode Gorilla/DoD chunks, compare to tier points
     import graft.functions.{gorilla_decode, dod_decode}
@@ -162,6 +169,87 @@ class RollupEngineSpec extends AnyFunSuite {
     }
     // lineage recorded for every (tier, day)
     assert(ioB.lineageLines().nonEmpty)
+  }
+
+  test("crash repair: coarser tiers pending over a committed finer tier " +
+    "cascade from its committed states and equal a clean run") {
+    import java.nio.file.Files
+    val clean = Files.createTempDirectory("graft_clean").toString
+    val repaired = Files.createTempDirectory("graft_repair").toString
+    val conf = RollupJob.Conf(tableRoot = clean, scale = scale, jobId = "j")
+    RollupJob.run(spark, bulk, conf)
+    // a run that committed only the 1m tier...
+    RollupJob.run(spark, bulk, conf.copy(tableRoot = repaired,
+      tiers = Seq("1m" -> "1 minute")))
+    // ...then a run with every tier over the same days. Its token arrays
+    // are zeroed, so any tier computed from raw rows instead of the
+    // committed 1m states would differ from the clean run
+    val zeroed = bulk.withColumn("tokens", transform(col("tokens"), x => x - x))
+    val res = RollupJob.run(spark, zeroed, conf.copy(tableRoot = repaired))
+    assert(res.map(r => r.tier -> r.newDays.nonEmpty) ==
+      Seq("1m" -> false, "1h" -> true, "1d" -> true))
+    val (a, b) = (new TableIO(clean), new TableIO(repaired))
+    for (t <- Seq("1h", "1h-chunks", "1d", "1d-chunks")) {
+      val x = a.read(spark, t).get
+      val y = b.read(spark, t).get
+      assert(x.count() > 0 && x.exceptAll(y).count() == 0 &&
+        y.exceptAll(x).count() == 0, s"$t differs from the clean run")
+    }
+    def lineage(io: TableIO, t: String) =
+      io.lineageLines().filter(_.contains(s"\"tier\":\"$t\"")).sorted
+    for (t <- Seq("1h", "1d"))
+      assert(lineage(a, t).nonEmpty && lineage(a, t) == lineage(b, t), s"$t lineage")
+  }
+
+  test("range read infers the tier schema once, not once per snapshot") {
+    import spark.implicits._
+    import java.nio.file.{Files => JFiles}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.graft.SparkTestHooks.drainListeners
+    val root = JFiles.createTempDirectory("graft_schema").toString
+    val io = new TableIO(root, checkpointEvery = 100)
+    (0 until 5).foreach(i => io.commit("f",
+      Seq(("s1", i * 86400L, i.toDouble)).toDF("source", "commit_bucket", "value"),
+      Seq(i * 86400L), "j"))
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drainListeners(sc)
+    sc.addSparkListener(listener)
+    val slice = try {
+      val df = io.readRange(spark, "f", 0L, 5 * 86400L).get
+      drainListeners(sc)
+      df
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"${jobs.get} jobs building a 5-snapshot range read")
+    assert(slice.select("value").as[Double].collect().sorted.toSeq ==
+      (0 until 5).map(_.toDouble))
+  }
+
+  test("staging leftovers: invisible to every reader, reclaimed by the " +
+    "next commit") {
+    import spark.implicits._
+    import java.nio.file.{Files => JFiles, Paths => JPaths}
+    val root = JFiles.createTempDirectory("graft_staging").toString
+    val io = new TableIO(root, checkpointEvery = 100)
+    def df(b: Long, v: Double) =
+      Seq(("s1", b, v)).toDF("source", "commit_bucket", "value")
+    io.commit("f", df(0L, 0.0), Seq(0L), "j")
+    // a crashed writer's staged, never published write of a live bucket
+    val stray = JPaths.get(root, "data", "f", "_staging", "x")
+    df(0L, 99.0).write.partitionBy("source").parquet(stray.toString)
+    def values(d: org.apache.spark.sql.DataFrame) =
+      d.select("value").as[Double].collect().sorted.toSeq
+    assert(values(io.read(spark, "f").get) == Seq(0.0))
+    assert(values(io.readRange(spark, "f", 0L, 1L).get) == Seq(0.0))
+    assert(io.doneBuckets("f") == Set(0L))
+    assert(io.snapshots().map(_.dir) == Seq("data/f/snap-1"))
+    io.commit("f", df(86400L, 1.0), Seq(86400L), "j")
+    assert(!JFiles.exists(stray), "staging leftover survived a commit")
+    assert(values(io.read(spark, "f").get) == Seq(0.0, 1.0))
   }
 
   test("manifest checkpoint compaction: many commits read via checkpoint; " +
