@@ -189,17 +189,13 @@ object RollupJob {
             if (r.isNullAt(2)) 0L else r.getLong(2), r.getLong(3).toHexString))
           .toSeq)
         finerLineage = Some(lineage)
-        // REBALANCE before the partitioned write (guide: output file
-        // sizing): without it every upstream task writes a sliver into
-        // every source dir — ~(tasks x sources) tiny files per snapshot,
-        // taxing each subsequent manifest read and footer pass. AQE sizes
-        // the rebalanced partitions (advisoryPartitionSizeInBytes), so
-        // locally this collapses to one file per source while at scale it
-        // yields size-targeted files — the Iceberg write.distribution-mode
-        // = hash behaviour, at the documented cost of one extra exchange
-        // of the (metadata-sized) tier output
-        val featsW = stage.after(Some(lineage))(
-          io.stage(p.tier, feats.hint("rebalance", "source")))
+        // One file per write task. The rebalance sizes the files (AQE
+        // coalesces toward advisoryPartitionSizeInBytes): a metadata-sized
+        // tier lands as one file, the 1m tier at scale as size-targeted
+        // files, not a sliver per upstream task. The sorts keep each
+        // source's rows contiguous, so parquet min/max prune on `source`.
+        val featsW = stage.after(Some(lineage))(io.stage(p.tier,
+          feats.hint("rebalance", "source").sortWithinPartitions("source", "bucket")))
         val ordered = feats
           .withColumn("bs", unix_timestamp(col("bucket")))
           .groupBy(col("source"), col("commit_bucket"))
@@ -210,7 +206,8 @@ object RollupJob {
             dod_encode(col("pts.bs")).as("ts_dod")) ++
             conf.chunkFeatures.map(c =>
               gorilla_encode(col(s"pts.$c")).as(s"${c}_gor")): _*)
-        val chunksW = stage.after(Some(lineage))(io.stage(s"${p.tier}-chunks", chunks))
+        val chunksW = stage.after(Some(lineage))(io.stage(s"${p.tier}-chunks",
+          chunks.sortWithinPartitions("source", "commit_bucket")))
         (featsW, lineage, chunksW)
       })
       stage.awaitAll()

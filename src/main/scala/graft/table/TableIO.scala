@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Iceberg-style table layout: immutable per-commit data directories +
   * an append-only JSON-lines snapshot log (the manifest). No Iceberg
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   * behind this facade.
   *
   * Layout:
-  *   root/data/<tier>/snap-<id>/   parquet (partitioned by source), immutable
+  *   root/data/<tier>/snap-<id>/   parquet, one file per write task, immutable
   *   root/data/<tier>/_staging/    writes not yet published (see below)
   *   root/meta/snapshots.jsonl     one JSON object per committed snapshot
   *                                 or retention tombstone, append-only
@@ -90,9 +91,8 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
 
   /** Sum the exact row counts of every part file's parquet footer —
     * what the commit records as `rows`, without re-scanning the data.
-    * An all-empty write (possible only without partitionBy: partitioned
-    * writes emit no files for empty partitions) sums to 0, matching the
-    * former count()-based emptiness decision row for row. */
+    * An all-empty write leaves one schema-only part file and sums to 0,
+    * matching the former count()-based emptiness decision row for row. */
   private def countParquetRows(dir: Path): Long = {
     import scala.jdk.CollectionConverters._
     val conf = TableIO.hadoopConf
@@ -102,8 +102,7 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
         .filter(_.getFileName.toString.startsWith("part-")).toVector
       finally s.close()
     // footer opens cost ~ms each through the Hadoop layer — read them in
-    // parallel so a many-file snapshot (pre-rebalance layouts, wide
-    // writes) stays cheap
+    // parallel so a many-file snapshot (wide writes) stays cheap
     parts.asJava.parallelStream().mapToLong { p =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(p.toUri), conf)
@@ -443,15 +442,16 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
   }
 
   /** Spark-write `df` into a fresh staging dir of `tier` and count its
-    * rows from the footers. The plan is evaluated ONCE: emptiness comes
+    * rows from the footers. One file per write task, rows in `df`'s order:
+    * the caller sizes and clusters the files (rebalance, sort within
+    * partitions). The plan is evaluated ONCE: emptiness comes
     * from what was actually written (a separate isEmpty action would
     * re-execute the plan and could disagree with the written data for
     * nondeterministic inputs). Takes neither this instance's monitor nor
     * the commit lock, so a lock holder may stage from pool threads; the
     * caller must hold the lock (`locked`), or the next lock taker
     * reclaims the staging dir. */
-  private[graft] def stage(tier: String, df: DataFrame,
-                           partitionBy: Seq[String] = Seq("source")): Staged = {
+  private[graft] def stage(tier: String, df: DataFrame): Staged = {
     // tier names become filesystem paths — keep them path- and JSON-safe
     require(tier.matches("[A-Za-z0-9._-]+"),
       s"tier '$tier' must match [A-Za-z0-9._-]+")
@@ -462,8 +462,7 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     val dir = Paths.get(root, "data", tier, TableIO.StagingDir,
       java.util.UUID.randomUUID().toString)
     Files.createDirectories(dir.getParent)
-    val writer = if (partitionBy.nonEmpty) df.write.partitionBy(partitionBy: _*) else df.write
-    writer.mode("overwrite").parquet(dir.toString)
+    df.write.mode("overwrite").parquet(dir.toString)
     // exact row count from the written parquet FOOTERS (driver-side,
     // O(files)) — the former spark.read(...).count() launched a full
     // second Spark scan job per commit just to fill snapshot metadata
@@ -481,7 +480,7 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
       // A bucket can legitimately finalize to zero rows (every input row
       // below the state minimum): record it in the manifest (it IS done —
       // resume must not re-run it forever) but keep no data directory
-      // (a 0-row partitioned parquet write has no readable footer).
+      // (the write left only a schema-only part file).
       val snapRel = s"data/${staged.tier}/snap-$id"
       val relDir = if (staged.rows == 0L) {
         deleteRec(staged.dir)
@@ -508,9 +507,9 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
 
   /** Atomically commit a tier DataFrame covering `buckets`: stage, then
     * publish, under one hold of the commit lock. */
-  def commit(tier: String, df: DataFrame, buckets: Seq[Long], jobId: String,
-             partitionBy: Seq[String] = Seq("source")): Snapshot = synchronized {
-    locked { publish(stage(tier, df, partitionBy), buckets, jobId) }
+  def commit(tier: String, df: DataFrame, buckets: Seq[Long],
+             jobId: String): Snapshot = synchronized {
+    locked { publish(stage(tier, df), buckets, jobId) }
   }
 
   /** Read a tier through the manifest: union of committed snapshot dirs,
@@ -540,11 +539,12 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     val live = snaps.filter(s => s.dir.nonEmpty && kept(s.id).nonEmpty)
     if (live.isEmpty) return None
     def path(s: Snapshot) = Paths.get(root, s.dir).toString
-    // schema inference runs a Spark job per parquet read: infer once and
-    // hand the schema to the other snapshots (unionByName already needs
-    // every snapshot of a tier to share it)
-    val first = spark.read.parquet(path(live.head))
-    val dfs = first +: live.tail.map(s => spark.read.schema(first.schema).parquet(path(s)))
+    // schema inference runs a Spark job per parquet read: infer once for
+    // every snapshot. `source` is pinned to string, or a snapshot in the
+    // former source-partitioned layout types it from dir names ("007" -> 7)
+    val schema = StructType(spark.read.parquet(path(live.head)).schema.map(f =>
+      if (f.name == "source") f.copy(dataType = StringType) else f))
+    val dfs = live.map(s => spark.read.schema(schema).parquet(path(s)))
     // ALWAYS filter to the surviving winning buckets — skipping the
     // filter when keep == declared let rows whose commit_bucket was
     // never declared leak past last-commit-wins (commit() does not
@@ -566,8 +566,7 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     * the new snapshot only wins after its manifest append, and
     * last-commit-wins resolution is row-for-row what read() already
     * served. Returns None when the tier has nothing to compact. */
-  def compact(spark: SparkSession, tier: String, jobId: String = "compact",
-              partitionBy: Seq[String] = Seq("source")): Option[Snapshot] =
+  def compact(spark: SparkSession, tier: String, jobId: String = "compact"): Option[Snapshot] =
     // The WHOLE resolve→rewrite→commit→vacuum window holds the commit
     // lock (re-entrantly shared with the inner commit/vacuum): resolving
     // the visible state outside it would let a concurrent commit land
@@ -585,13 +584,12 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
             st.snaps.filter(_.tier == tier)
               .flatMap(s => kept(s.id)).distinct.sorted
           }
-          // the packing itself: co-locate each output partition's rows so
-          // the rewrite emits one file per partition value instead of
-          // carrying the union-read's fan-out into the new snapshot
-          val packed =
-            if (partitionBy.isEmpty) df.coalesce(1)
-            else df.repartition(partitionBy.map(col): _*)
-          val snap = commit(tier, packed, buckets, jobId, partitionBy)
+          // the packing itself: an AQE rebalance sizes the files, and the
+          // sort restores the writers' order: (source, bucket) for features
+          // (commit_bucket is a bucket's day), (source, commit_bucket) else
+          val order = Seq("source", "commit_bucket", "bucket").filter(df.columns.contains)
+          val packed = df.hint("rebalance", order.head).sortWithinPartitions(order.map(col): _*)
+          val snap = commit(tier, packed, buckets, jobId)
           vacuum()
           snap
         }

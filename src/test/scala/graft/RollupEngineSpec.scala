@@ -392,6 +392,128 @@ class RollupEngineSpec extends AnyFunSuite {
     assert(io.retentionCutoff("f").contains(2 * 86400L))
   }
 
+  test("source round-trips as a string, in either snapshot order") {
+    import spark.implicits._
+    import java.nio.file.{Files => JFiles}
+    import org.apache.spark.sql.types.StringType
+    def df(sources: Seq[String], b: Long) =
+      sources.map(s => (s, b, 1.0)).toDF("source", "commit_bucket", "value")
+    def day(i: Int) = i * 86400L
+    def sources(d: org.apache.spark.sql.DataFrame) =
+      d.select("source").as[String].collect().sorted.toSeq
+    val numeric = Seq("007", "012")
+    for ((first, second) <- Seq(numeric -> Seq("s1"), Seq("s1") -> numeric)) {
+      val io = new TableIO(JFiles.createTempDirectory("graft_srctype").toString)
+      io.commit("f", df(first, day(0)), Seq(day(0)), "j")
+      io.commit("f", df(second, day(1)), Seq(day(1)), "j")
+      val all = io.read(spark, "f").get
+      assert(all.schema("source").dataType == StringType)
+      assert(sources(all) == Seq("007", "012", "s1"))
+      assert(sources(io.readRange(spark, "f", day(0), day(1)).get) == first)
+      assert(sources(io.readRange(spark, "f", day(1), day(2)).get) == second)
+    }
+  }
+
+  test("tier snapshots: one clustered file per write task, no per-source " +
+    "dirs, source predicate pushed into the parquet scan") {
+    import java.nio.file.{Files => JFiles, Path => JPath, Paths => JPaths}
+    import scala.jdk.CollectionConverters._
+    val corpus = TokenGen.bulk(spark, 300, nSources = 16, minLen = 16, maxLen = 128)
+    val root = JFiles.createTempDirectory("graft_layout").toString
+    RollupJob.run(spark, corpus, RollupJob.Conf(tableRoot = root, scale = scale))
+    val io = new TableIO(root)
+    val maxFiles = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def walk(dir: JPath) = {
+      val s = JFiles.walk(dir)
+      try s.iterator().asScala.drop(1).toVector finally s.close()
+    }
+    val snaps = io.snapshots()
+    assert(snaps.map(_.tier).sorted ==
+      Seq("1d", "1d-chunks", "1h", "1h-chunks", "1m", "1m-chunks"))
+    snaps.foreach { s =>
+      val entries = walk(JPaths.get(root, s.dir))
+      assert(!entries.exists(_.getFileName.toString.startsWith("source=")),
+        s"${s.tier}: per-source dir in $entries")
+      val parts = entries.filter(_.getFileName.toString.startsWith("part-"))
+      assert(parts.nonEmpty && parts.size <= maxFiles, s"${s.tier}: ${parts.size} files")
+      val key = if (s.tier.endsWith("-chunks")) "commit_bucket" else "bucket"
+      parts.foreach { f =>
+        val rows = spark.read.parquet(f.toString)
+          .select(col("source"), col(key).cast("long")).collect()
+          .map(r => (r.getString(0), r.getLong(1))).toSeq
+        assert(rows == rows.sorted, s"${s.tier}: $f not ordered by (source, $key)")
+      }
+    }
+    val plan = io.readRange(spark, "1m", Long.MinValue, Long.MaxValue).get
+      .where(col("source") === "s3").queryExecution.executedPlan.toString
+    assert("PushedFilters: \\[.*EqualTo\\(source,s3\\)".r.findFirstIn(plan).isDefined,
+      s"source predicate not pushed into the scan:\n$plan")
+  }
+
+  test("mixed layouts: a source-partitioned snapshot reads like the new " +
+    "layout in either order, and compaction rewrites it") {
+    import spark.implicits._
+    import java.nio.file.{Files => JFiles, Paths => JPaths}
+    def df(b: Long, v: Double) =
+      Seq(("007", b, v), ("s1", b, v + 0.5)).toDF("source", "commit_bucket", "value")
+    def day(i: Int) = i * 86400L
+    // three daily snapshots; `legacy` (if any) in the former layout, staged
+    // and published under one hold of the lock like any other write
+    def table(legacy: Option[Int]) = {
+      val io = new TableIO(JFiles.createTempDirectory("graft_mixed").toString)
+      (0 until 3).foreach { i =>
+        if (legacy.contains(i)) io.locked {
+          val dir = JPaths.get(io.root, "data", "f", "_staging", "legacy")
+          df(day(i), i.toDouble).write.partitionBy("source").parquet(dir.toString)
+          io.publish(io.Staged("f", dir, 2L), Seq(day(i)), "old")
+        } else io.commit("f", df(day(i), i.toDouble), Seq(day(i)), "j")
+      }
+      io
+    }
+    def dump(d: org.apache.spark.sql.DataFrame) =
+      d.select("source", "commit_bucket", "value").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    def reads(io: TableIO) = Seq(io.read(spark, "f").get,
+      io.readRange(spark, "f", day(0), day(2)).get,
+      io.readRange(spark, "f", day(1), day(3)).get).map(dump)
+    val expected = reads(table(None))
+    assert(expected.head.size == 6)
+    for (legacy <- Seq(0, 2)) {
+      val io = table(Some(legacy))
+      assert(JFiles.exists(JPaths.get(io.root, "data", "f", s"snap-${legacy + 1}", "source=007")))
+      assert(reads(io) == expected, s"legacy snapshot at day $legacy")
+      val snap = io.compact(spark, "f").get
+      val dir = JPaths.get(io.root, snap.dir)
+      val names = dir.toFile.list()
+      assert(names.exists(_.startsWith("part-")) && !names.exists(_.startsWith("source=")))
+      assert(spark.read.parquet(dir.toString).schema("source").dataType ==
+        org.apache.spark.sql.types.StringType)
+      assert(reads(io) == expected, s"compacted, legacy snapshot at day $legacy")
+    }
+  }
+
+  test("an all-empty write publishes a dir-less 0-row snapshot that counts " +
+    "as done and reads as nothing") {
+    import spark.implicits._
+    import java.nio.file.{Files => JFiles}
+    val io = new TableIO(JFiles.createTempDirectory("graft_empty").toString)
+    def df(b: Long) = Seq(("s1", b, 1.0)).toDF("source", "commit_bucket", "value")
+    io.commit("f", df(0L), Seq(0L), "j")
+    val snap = io.locked {
+      val staged = io.stage("f", df(86400L).where(lit(false)))
+      // the unpartitioned write leaves one schema-only part file
+      val parts = staged.dir.toFile.list().filter(_.startsWith("part-"))
+      assert(parts.length == 1 && staged.rows == 0L)
+      io.publish(staged, Seq(86400L), "j")
+    }
+    assert(snap.dir == "" && snap.rows == 0L)
+    assert(io.snapshots().map(s => (s.dir, s.rows)) == Seq(("data/f/snap-1", 1L), ("", 0L)))
+    assert(io.doneBuckets("f") == Set(0L, 86400L))
+    assert(!JFiles.exists(java.nio.file.Paths.get(io.root, "data", "f", "snap-2")))
+    assert(io.read(spark, "f").get.select("commit_bucket").as[Long].collect().toSeq == Seq(0L))
+    assert(io.readRange(spark, "f", 86400L, 2 * 86400L).isEmpty)
+  }
+
   test("token-array equality invariant: ingest -> table -> read back") {
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft_tok").toString
