@@ -196,9 +196,9 @@ object SparkEntry {
     }),
 
     // Streaming==batch gate: the SAME 10-minute token docs driven through
-    // the watermarked Structured Streaming tier (AvailableNow -> memory
-    // sink) must reproduce the direct 1h aggregate the oracle computes —
-    // the streaming face of the mergeable state is driver-gated, not just
+    // the stateful Structured Streaming tier (AvailableNow -> memory sink)
+    // must reproduce the direct 1h aggregate the oracle computes — the
+    // streaming face of the mergeable state is oracle-gated, not just
     // ScalaTest-gated.
     "q_streaming_equivalence" -> ((s, dir) => {
       val src = "/tmp/graft_stream_gate"
@@ -215,44 +215,16 @@ object SparkEntry {
           transform(col("evs"), e => e.getField("c").cast("int")).as("tokens"))
         .withColumn("n_tok", size(col("tokens")))
         .write.mode("overwrite").parquet(src)
-      val tag = System.nanoTime()
-      // the orderless tier and the stateful diff tier are INDEPENDENT
-      // streaming queries over the same staged source — start both, then
-      // await both, so their micro-batch schedules overlap instead of
-      // running back to back (each keeps its own checkpoint, state store
-      // and sink table; results are unchanged)
-      val qa = graft.streaming.StreamingRollup.startOnce(s, src, "1 hour",
-        "1 minute", 1.0, "graft_stream_gate_" + tag)
-      val qd = graft.streaming.StreamingRollup.startOnceDiff(s, src, "1 hour",
-        "1 minute", 1.0, "graft_stream_diff_" + tag)
-      try {
-        qa.awaitTermination()
-        qd.awaitTermination()
-      } catch {
-        case t: Throwable =>
-          // one stream failing must not leak the other still running over
-          // the staged dir (the next invocation deletes and rewrites it)
-          Seq(qa, qd).foreach(q => try q.stop() catch { case _: Throwable => () })
-          throw t
-      }
-      val out = s.table("graft_stream_gate_" + tag)
-      // diff-family (line_length) from the STATEFUL streaming path: the
-      // boundary bridge under incremental processing, exact vs the oracle.
-      // The fallback wrapper, not bare collapse: if a window ever
-      // overflows maxSegs here, its diff family must come from the batch
-      // cascade rather than silently emitting the zeroed overflow row
-      val diff = graft.streaming.StreamingRollup.diffWithBatchFallback(s,
-        graft.streaming.StreamingRollup.collapseDiff(s,
-          "graft_stream_diff_" + tag), src, "1 hour", 1.0)
-        .select(col("source"), col("bucketS"),
-          ((col("sumAbsD") / (col("n") - 1)) / 100.0).as("line_length"))
-      out.select(col("source"),
-        unix_timestamp(col("bucket")).as("bucketS"),
-        col("n").cast("long").as("n"),
-        (col("mean") / 100.0).as("mean"))
-        .join(diff, Seq("source", "bucketS"))
+      // n and mean from the orderless sums, line_length from the boundary
+      // bridge under incremental processing, exact vs the oracle. The
+      // fallback wrapper, not bare collapse: if a window ever overflows
+      // maxSegs here, its diff family must come from the batch cascade
+      // rather than silently emitting the zeroed overflow row
+      graft.streaming.StreamingRollup.runOnceDiffWithBatchFallback(s, src,
+        "1 hour", "1 minute", 1.0, "graft_stream_diff_" + System.nanoTime())
         .select(col("source").as("event_type"), col("bucketS").as("bucket_s"),
-          col("n"), col("mean"), col("line_length"))
+          col("n"), (col("s1") / col("n") / 100.0).as("mean"),
+          ((col("sumAbsD") / (col("n") - 1)) / 100.0).as("line_length"))
         .orderBy("event_type", "bucket_s")
     }),
 

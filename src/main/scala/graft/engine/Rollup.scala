@@ -66,19 +66,10 @@ object Rollup {
     */
   def saltedPartials(df: DataFrame, keys: Seq[String], ts: String,
                      value: String, win: String, saltBuckets: Int): DataFrame = {
-    val v = widened(df, value)
     // salt from row content (deterministic under task retries)
     val salted = df.withColumn("_salt",
-      pmod(hash(col(ts), v), lit(saltBuckets)))
-    val stage1 = salted
-      .groupBy((keys.map(col) ++ Seq(window(col(ts), win).as("w"), col("_salt"))): _*)
-      .agg(count(v).as("p_n"), sum(v).as("p_sum"), sum(v * v).as("p_sumsq"),
-        min(v).as("p_min"), max(v).as("p_max"))
-    stage1.groupBy((keys.map(col) :+ col("w")): _*)
-      .agg(sum("p_n").as("p_n"), sum("p_sum").as("p_sum"),
-        sum("p_sumsq").as("p_sumsq"), min("p_min").as("p_min"),
-        max("p_max").as("p_max"))
-      .withColumn("bucket", col("w.start")).drop("w")
+      pmod(hash(col(ts), widened(df, value)), lit(saltBuckets)))
+    merge(partials(salted, keys :+ "_salt", ts, value, win), keys, win)
   }
 
   /** Dense-calendar LOCF gap-fill: explode the per-key [min, max] bucket

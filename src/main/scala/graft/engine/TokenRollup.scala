@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{token_partials, feature, FeatureParams}
+import graft.functions.{token_partials, feature, FeatureParams, TokenPartialsExpr}
 
 /** Continuous aggregates over the token-sequence table: per-row partial
   * states composed, in concatenation order, into per-(source, window)
@@ -27,8 +27,8 @@ import graft.functions.{token_partials, feature, FeatureParams}
   */
 object TokenRollup {
 
-  val StateFields: Seq[String] = Seq("n", "s1", "s2", "s3", "s4", "mn", "mx",
-    "sumAbsD", "sumDSq", "sumESq", "f1", "f2", "l1", "l2", "zc", "fSgn", "lSgn")
+  /** The state struct's field names, in order (graft.core.TokenState). */
+  val StateFields: Seq[String] = TokenPartialsExpr.schema.fieldNames.toSeq
 
   /** Per-row states from the token table. The n >= 2 precondition is
     * filtered on the cheap n_tok column BEFORE the projection — filtering
@@ -45,7 +45,8 @@ object TokenRollup {
   /** Compose unit states (ordered by `orderCols` within (source, window))
     * into one state per (source, bucket). The lag-bridge materializes the
     * cross-unit boundary terms, after which the reduction is plain sums —
-    * orderless, partial-aggregatable, salt-friendly. */
+    * orderless, partial-aggregatable, salt-friendly. The Column form of
+    * graft.core.TokenState's `++` (TokenStateSpec ties the two together). */
   def mergeToBuckets(units: DataFrame, win: String,
                      orderCols: Seq[String]): DataFrame = {
     val withW = units.withColumn("w", window(col(orderCols.head), win))
@@ -107,7 +108,7 @@ object TokenRollup {
 
   /** Finalize a bucket-state into the algebraic feature columns —
     * closed forms over the merged sums, matching the reference kernels
-    * (formula notes in functions.TokenPartialsExpr). */
+    * (state fields in graft.core.TokenState). */
   def finalizeFeatures(states: DataFrame): DataFrame = {
     val n = col("P.n").cast("double")
     val s1 = col("P.s1"); val s2 = col("P.s2")

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -8,23 +9,12 @@ import org.apache.spark.sql.types._
 
 /** Mergeable per-row partial state for the algebraic feature family —
   * the continuous-aggregate core (SURVEY.md §7.3). One pass over the
-  * row's token array produces a state struct that composes exactly, in
-  * concatenation order, into the same features the per-epoch kernels
-  * compute on the concatenated signal:
-  *
-  *   n, s1..s4 (raw moment sums), mn/mx,
-  *   sumAbsD / sumDSq  (first-difference sums, row-internal),
-  *   sumESq            (second-difference squares, row-internal),
-  *   f1/f2/l1/l2       (first/last two samples — boundary bridging),
-  *   zc / fSgn / lSgn  (zero-crossing count + edge signs).
-  *
-  * Merge rule for A ++ B (implemented with window-lag bridging in
-  * engine.TokenRollup): additive fields sum; the boundary first-difference
-  * d = B.f1 - A.l1 contributes |d| and d^2; the boundary second
-  * differences (d - (A.l1 - A.l2)) and ((B.f2 - B.f1) - d) contribute to
-  * sumESq; zero-crossing boundary terms follow the reference counting
-  * rule (univariate.py:1084-1094) on (A.lSgn, B.fSgn). Rows must have
-  * n >= 2 for the merge to stay associative (generator guarantees >= 64).
+  * row's token array produces a `graft.core.TokenState` struct (fields and
+  * merge rules documented there) that composes exactly, in concatenation
+  * order, into the same features the per-epoch kernels compute on the
+  * concatenated signal. engine.TokenRollup implements the ordered merge
+  * with window-lag bridging. Rows must have n >= 2 for the merge to stay
+  * associative (generator guarantees >= 64).
   */
 case class TokenPartialsExpr(child: Expression, scale: Double,
                              zcThreshold: Double = 2.220446049250313e-16)
@@ -114,22 +104,5 @@ case class TokenPartialsExpr(child: Expression, scale: Double,
 }
 
 object TokenPartialsExpr {
-  val schema: StructType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("s1", DoubleType, nullable = false),
-    StructField("s2", DoubleType, nullable = false),
-    StructField("s3", DoubleType, nullable = false),
-    StructField("s4", DoubleType, nullable = false),
-    StructField("mn", DoubleType, nullable = false),
-    StructField("mx", DoubleType, nullable = false),
-    StructField("sumAbsD", DoubleType, nullable = false),
-    StructField("sumDSq", DoubleType, nullable = false),
-    StructField("sumESq", DoubleType, nullable = false),
-    StructField("f1", DoubleType, nullable = false),
-    StructField("f2", DoubleType, nullable = false),
-    StructField("l1", DoubleType, nullable = false),
-    StructField("l2", DoubleType, nullable = false),
-    StructField("zc", LongType, nullable = false),
-    StructField("fSgn", IntegerType, nullable = false),
-    StructField("lSgn", IntegerType, nullable = false)))
+  val schema: StructType = Encoders.product[graft.core.TokenState].schema
 }

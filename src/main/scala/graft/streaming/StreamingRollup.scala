@@ -4,80 +4,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.core.TokenState
 import graft.functions.token_partials
 
-/** Structured Streaming face of the tier engine: the same per-row
-  * mergeable state, aggregated with built-in (streaming-compatible)
-  * aggregates over watermarked tumbling windows.
-  *
-  * Scope note (documented contract): streaming emits the orderless subset
-  * of the state — moments, extrema, counts — because the cross-row
-  * boundary bridge needs total order within a window (a lag), which the
-  * incremental model cannot provide. Diff-family features (line_length,
-  * Hjorth) come from the batch cascade; the streaming tier serves the
-  * live dashboardable subset with exactly the batch values for those
-  * columns (same partial sums, same finalize arithmetic).
+/** Structured Streaming face of the tier engine: one stateful tier over
+  * the same per-row mergeable state (graft.core.TokenState) as the batch
+  * cascade. Its emissions carry the whole state, so the orderless family
+  * (moments, extrema, counts) and the diff family (line_length, Hjorth,
+  * zero crossings) both come out equal to the batch cascade and finalize
+  * through TokenRollup.finalizeFeatures. Windows too hot to keep their
+  * boundary tuples keep O(1) state with exact orderless sums and take
+  * their diff family from the batch cascade (diffWithBatchFallback).
   */
 object StreamingRollup {
 
-  /** Watermarked tumbling-window tier over a streaming token table. */
-  def tier(stream: DataFrame, win: String, watermark: String,
-           scale: Double): DataFrame = {
-    val withState = stream
-      .withColumn("P", token_partials(col("tokens"), scale))
-      .where(col("P").isNotNull)
-      .withWatermark("event_time", watermark)
-    withState
-      .groupBy(col("source"), window(col("event_time"), win).as("w"))
-      .agg(sum("P.n").as("n"), sum("P.s1").as("s1"), sum("P.s2").as("s2"),
-        sum("P.s3").as("s3"), sum("P.s4").as("s4"),
-        min("P.mn").as("mn"), max("P.mx").as("mx"),
-        count(lit(1)).as("rows_in"))
-      .select(col("source"), col("w.start").as("bucket"),
-        col("n"), col("rows_in"),
-        (col("s1") / col("n")).as("mean"),
-        ((col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - 1))
-          .as("variance"),
-        sqrt(col("s2") / col("n")).as("rms"),
-        (col("mx") - col("mn")).as("ptp_amp"))
-  }
-
-  /** Start the bounded-source tier into a memory sink without awaiting —
-    * callers running several INDEPENDENT streaming gates can start them
-    * all and await together, overlapping their micro-batch schedules
-    * (Spark runs concurrently-started streaming queries side by side;
-    * each keeps its own checkpoint + sink table). */
-  def startOnce(spark: SparkSession, sourceDir: String, win: String,
-                watermark: String, scale: Double,
-                queryName: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(sourceDir).schema
-    val stream = spark.readStream.schema(schema).parquet(sourceDir)
-    tier(stream, win, watermark, scale)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Drive a bounded source synchronously into a memory sink (test/dev). */
-  def runOnce(spark: SparkSession, sourceDir: String, win: String,
-              watermark: String, scale: Double, queryName: String): DataFrame = {
-    startOnce(spark, sourceDir, win, watermark, scale, queryName)
-      .awaitTermination()
-    spark.table(queryName)
-  }
-
-  /** Diff-family streaming tier (r3): the cross-row boundary bridge under
+  /** Stateful tier (r3): the cross-row boundary bridge under
     * incremental processing. flatMapGroupsWithState carries, per (source,
     * window), the per-row BOUNDARY tuples (first/last two samples + edge
-    * signs, in row order) plus the running row-internal sums; each trigger
-    * re-derives the bridge terms from the sorted boundaries — so
-    * line_length, Hjorth and zero-crossings come out EXACTLY equal to the
-    * batch cascade regardless of arrival order, which a watermarked
-    * groupBy (orderless) cannot do. State is O(rows-in-window) boundary
-    * tuples, capped by `maxSegs` (hotter windows belong to the batch
-    * cascade); windows evict on event-time timeout one watermark past the
-    * window end.
+    * signs, in row order) plus the running orderless merge (`+`) of the
+    * row states; each trigger re-derives the bridge terms from the sorted
+    * boundaries — so line_length, Hjorth and zero-crossings come out
+    * EXACTLY equal to the batch cascade regardless of arrival order, which
+    * a watermarked groupBy (orderless) cannot do. State is
+    * O(rows-in-window) boundary tuples, capped by `maxSegs` (hotter
+    * windows belong to the batch cascade); windows evict on event-time
+    * timeout one watermark past the window end.
     *
     * Incremental state (r4): `segs` is kept SORTED as a state invariant —
     * each trigger sorts only its own k arrivals and two-pointer-merges
@@ -120,11 +71,7 @@ object StreamingRollup {
         unix_micros(col("event_time")).as("ts"), col("doc_id"),
         // the watermark-tagged column must reach the stateful operator for
         // EventTimeTimeout to be accepted (it is otherwise unused)
-        col("event_time"),
-        col("P.n"), col("P.s1"), col("P.s2"), col("P.s3"), col("P.s4"),
-        col("P.mn"), col("P.mx"), col("P.sumAbsD"), col("P.sumDSq"),
-        col("P.sumESq"), col("P.f1"), col("P.f2"), col("P.l1"), col("P.l2"),
-        col("P.zc"), col("P.fSgn"), col("P.lSgn"),
+        col("event_time"), col("P"),
         coalesce(col("n_tok").cast("long"), col("P.n")).as("rowTokens"))
       .as[In]
     rows.groupByKey(r => (r.source, r.bucketS))
@@ -135,22 +82,15 @@ object StreamingRollup {
             state.remove()
             Iterator.empty
           } else {
-            var st = state.getOption.getOrElse(St(Vector.empty, 0L,
-              0.0, 0.0, 0.0, 0.0, Double.PositiveInfinity,
-              Double.NegativeInfinity, 0.0, 0.0, 0.0, 0L, 0L, 0L,
-              overflowed = false))
+            var st = state.getOption.getOrElse(
+              St(Vector.empty, TokenState.empty, 0L, 0L, overflowed = false))
             val freshB = Vector.newBuilder[Seg]
             it.foreach { r =>
-              freshB += Seg(r.ts, r.doc_id, r.f1, r.f2, r.l1, r.l2,
-                r.fSgn, r.lSgn)
-              st = st.copy(
-                n = st.n + r.n, s1 = st.s1 + r.s1, s2 = st.s2 + r.s2,
-                s3 = st.s3 + r.s3, s4 = st.s4 + r.s4,
-                mn = math.min(st.mn, r.mn), mx = math.max(st.mx, r.mx),
-                accAbsD = st.accAbsD + r.sumAbsD,
-                accDSq = st.accDSq + r.sumDSq,
-                accESq = st.accESq + r.sumESq, accZc = st.accZc + r.zc,
-                rowsIn = st.rowsIn + 1, tokensIn = st.tokensIn + r.rowTokens)
+              val p = r.P
+              freshB += Seg(r.ts, r.doc_id, p.f1, p.f2, p.l1, p.l2,
+                p.fSgn, p.lSgn)
+              st = st.copy(acc = st.acc + p, rowsIn = st.rowsIn + 1,
+                tokensIn = st.tokensIn + r.rowTokens)
             }
             val fresh = freshB.result()
             if (st.overflowed || st.segs.size + fresh.size > maxSegs) {
@@ -169,37 +109,26 @@ object StreamingRollup {
             state.setTimeoutTimestamp(math.max(
               (key._2 * 1000L) + winMillis + wmMillis,
               state.getCurrentWatermarkMs() + 1))
-            if (st.overflowed) {
-              Iterator.single(Out(key._1, key._2, st.n, st.s1, st.s2, st.s3,
-                st.s4, st.mn, st.mx, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0L,
-                0, 0, st.rowsIn, st.tokensIn, overflow = true))
-            } else {
-              val sorted = st.segs
-              // bridge terms over consecutive boundaries — the same algebra
-              // as TokenRollup.mergeToBuckets' lag bridge
-              var sumAbsD = st.accAbsD; var sumDSq = st.accDSq
-              var sumESq = st.accESq; var zc = st.accZc
+            val p = if (st.overflowed) st.acc.orderless else {
+              // arrival-order sums, then the bridge terms in sorted order
+              val s = st.segs
+              var b = st.acc
               var i = 1
-              while (i < sorted.length) {
-                val a = sorted(i - 1); val b = sorted(i)
-                val d = b.f1 - a.l1
-                sumAbsD += math.abs(d)
-                sumDSq += d * d
-                sumESq += math.pow(d - (a.l1 - a.l2), 2) +
-                  math.pow((b.f2 - b.f1) - d, 2)
-                if (b.fSgn == 0 && a.lSgn != 0) zc += 1
-                if (b.fSgn * a.lSgn < 0) zc += 1
+              while (i < s.length) {
+                val x = s(i - 1); val y = s(i)
+                b = TokenState.bridge(b, x.l1, x.l2, x.lSgn, y.f1, y.f2, y.fSgn)
                 i += 1
               }
-              val h = sorted.head; val l = sorted.last
-              Iterator.single(Out(key._1, key._2, st.n, st.s1, st.s2, st.s3,
-                st.s4, st.mn, st.mx, sumAbsD, sumDSq, sumESq,
-                h.f1, h.f2, l.l1, l.l2, zc, h.fSgn, l.lSgn,
-                st.rowsIn, st.tokensIn, overflow = false))
+              val h = s.head; val l = s.last
+              b.copy(f1 = h.f1, f2 = h.f2, l1 = l.l1, l2 = l.l2,
+                fSgn = h.fSgn, lSgn = l.lSgn)
             }
+            Iterator.single(Out(key._1, key._2, p, st.rowsIn, st.tokensIn,
+              st.overflowed))
           }
         })
-      .toDF()
+      .select(col("source"), col("bucketS"), col("P.*"), col("rows_in"),
+        col("tokens_in"), col("overflow"))
   }
 
   /** Two-pointer merge of sorted boundary-tuple runs (ties: existing
@@ -223,8 +152,8 @@ object StreamingRollup {
     out.result()
   }
 
-  /** Start the diff tier into its memory sink without awaiting (see
-    * startOnce for the concurrent-gates rationale). */
+  /** Start the diff tier into its memory sink without awaiting (the
+    * caller awaits or stops the returned query). */
   def startOnceDiff(spark: SparkSession, sourceDir: String, win: String,
                     watermark: String, scale: Double, queryName: String,
                     maxSegs: Int = 1 << 17): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -298,22 +227,11 @@ object StreamingRollup {
 object StreamingDiff {
   final case class Seg(ts: Long, docId: String, f1: Double, f2: Double,
                        l1: Double, l2: Double, fSgn: Int, lSgn: Int)
-  final case class St(segs: Vector[Seg], n: Long, s1: Double, s2: Double,
-                      s3: Double, s4: Double, mn: Double, mx: Double,
-                      accAbsD: Double, accDSq: Double, accESq: Double,
-                      accZc: Long, rowsIn: Long, tokensIn: Long,
-                      overflowed: Boolean)
+  final case class St(segs: Vector[Seg], acc: TokenState, rowsIn: Long,
+                      tokensIn: Long, overflowed: Boolean)
   final case class In(source: String, bucketS: Long, ts: Long,
                       doc_id: String, event_time: java.sql.Timestamp,
-                      n: Long, s1: Double, s2: Double,
-                      s3: Double, s4: Double, mn: Double, mx: Double,
-                      sumAbsD: Double, sumDSq: Double, sumESq: Double,
-                      f1: Double, f2: Double, l1: Double, l2: Double,
-                      zc: Long, fSgn: Int, lSgn: Int, rowTokens: Long)
-  final case class Out(source: String, bucketS: Long, n: Long, s1: Double,
-                       s2: Double, s3: Double, s4: Double, mn: Double,
-                       mx: Double, sumAbsD: Double, sumDSq: Double,
-                       sumESq: Double, f1: Double, f2: Double, l1: Double,
-                       l2: Double, zc: Long, fSgn: Int, lSgn: Int,
+                      P: TokenState, rowTokens: Long)
+  final case class Out(source: String, bucketS: Long, P: TokenState,
                        rows_in: Long, tokens_in: Long, overflow: Boolean)
 }

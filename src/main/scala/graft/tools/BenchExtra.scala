@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.tools.BenchExtra [reps] [query ...]"
   *
-  * No query list = the full suite. Prints per-query all samples + min.
+  * No query list = the full suite. Prints per-query all samples + min; a
+  * query with a rep that threw prints as FAILED and is left out of min
+  * and total_min.
   */
 object BenchExtra {
 
@@ -21,6 +23,17 @@ object BenchExtra {
     val cols = df.columns.map(c => col(c).cast("string"))
     df.select(xxhash64(cols: _*).cast("double").as("h"))
       .agg(avg("h"), count(lit(1))).collect()(0).getLong(1)
+  }
+
+  /** Seconds one rep of `body` took, or None when it threw. */
+  private[graft] def timeRep(name: String)(body: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { body; Some((System.nanoTime() - t0) / 1e9) }
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[benchextra] $name: $e")
+        None
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -44,18 +57,20 @@ object BenchExtra {
     try forceEval(graft.SparkEntry.queries("q_mean")(spark, sfDir))
     catch { case _: Throwable => () }
     var total = 0.0
+    var failed = 0
     named.foreach { case (name, fn) =>
-      val samples = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try forceEval(fn(spark, sfDir))
-        catch { case e: Throwable => System.err.println(s"[benchextra] $name: $e") }
-        (System.nanoTime() - t0) / 1e9
+      val samples = (1 to reps).map(_ => timeRep(name)(forceEval(fn(spark, sfDir))))
+      val shown = samples.map(_.fold("FAILED")(s => f"$s%.3f")).mkString(",")
+      if (samples.contains(None)) {
+        failed += 1
+        println(s"[benchextra] $name FAILED samples=$shown")
+      } else {
+        val min = samples.flatten.min
+        total += min
+        println(f"[benchextra] $name min=$min%.3f samples=$shown")
       }
-      total += samples.min
-      println(f"[benchextra] $name min=${samples.min}%.3f " +
-        s"samples=${samples.map(s => f"$s%.3f").mkString(",")}")
     }
-    println(f"[benchextra] total_min=$total%.3f queries=${named.size}")
+    println(f"[benchextra] total_min=$total%.3f queries=${named.size} failed=$failed")
     spark.stop()
   }
 }

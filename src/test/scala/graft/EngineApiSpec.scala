@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -128,31 +128,32 @@ class EngineApiSpec extends AnyFunSuite {
   }
 
   test("streaming tier equals batch tier on the orderless features") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_stream").toString
-    val bulk = TokenGen.bulk(spark, 300, nSources = 3, minLen = 64, maxLen = 256)
-    bulk.write.mode("overwrite").parquet(dir)
+    spark.sparkContext.setLogLevel("ERROR")
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    TokenGen.bulk(spark, 300, nSources = 3, minLen = 64, maxLen = 256)
+      .write.mode("overwrite").parquet(dir)
 
+    // the streamed state, finalized through the one batch finalize
     val streamed = graft.streaming.StreamingRollup
-      .runOnce(spark, dir, "1 hour", "10 minutes", scale, "stream_tier")
-      .select("source", "bucket", "n", "mean", "variance", "rms", "ptp_amp")
-
+      .runOnceDiff(spark, dir, "1 hour", "10 minutes", scale, "stream_tier")
     val states = graft.engine.TokenRollup.rowStates(spark.read.parquet(dir), scale)
-    val batch = graft.engine.TokenRollup.finalizeFeatures(
-      graft.engine.TokenRollup.mergeToBuckets(states, "1 hour",
-        Seq("event_time", "doc_id")))
-      .select(col("source"), col("bucket"), col("n_samples").as("n"),
-        col("mean"), col("variance"), col("rms"), col("ptp_amp"))
+    val merged = graft.engine.TokenRollup.mergeToBuckets(states, "1 hour",
+      Seq("event_time", "doc_id"))
 
-    val a = streamed.collect().map(r => (r.getString(0), r.get(1).toString) -> r).toMap
-    val b = batch.collect().map(r => (r.getString(0), r.get(1).toString) -> r).toMap
+    def finalized(df: DataFrame) = graft.engine.TokenRollup.finalizeFeatures(df)
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r).toMap
+    val a = finalized(streamed.select(col("source"), col("bucketS").as("bucket"),
+      struct(graft.engine.TokenRollup.StateFields.map(col): _*).as("P"),
+      col("rows_in"), col("tokens_in")))
+    val b = finalized(merged.withColumn("bucket", unix_timestamp(col("bucket"))))
     assert(a.keySet == b.keySet && a.nonEmpty)
     a.foreach { case (k, ra) =>
       val rb = b(k)
-      for (i <- 2 until 7) {
-        val va = ra.get(i).toString.toDouble
-        val vb = rb.get(i).toString.toDouble
-        assert(math.abs(va - vb) <= 1e-9 * math.max(1.0, math.abs(vb)), s"$k col $i: $va vs $vb")
+      assert(ra.getAs[Long]("n_samples") == rb.getAs[Long]("n_samples"), s"$k n")
+      Seq("mean", "variance", "rms", "ptp_amp").foreach { c =>
+        val va = ra.getAs[Double](c); val vb = rb.getAs[Double](c)
+        assert(math.abs(va - vb) <= 1e-9 * math.max(1.0, math.abs(vb)),
+          s"$k $c: stream $va vs batch $vb")
       }
     }
   }
