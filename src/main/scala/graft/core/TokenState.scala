@@ -19,6 +19,7 @@ package graft.core
   *    least 2 samples.
   *
   * `engine.TokenRollup.finalizeFeatures` turns a state into features.
+  * `TokenSums` is the state without its edges.
   */
 final case class TokenState(n: Long, s1: Double, s2: Double, s3: Double,
                             s4: Double, mn: Double, mx: Double,
@@ -38,10 +39,9 @@ final case class TokenState(n: Long, s1: Double, s2: Double, s3: Double,
     TokenState.bridge(this + b, l1, l2, lSgn, b.f1, b.f2, b.fSgn)
       .copy(l1 = b.l1, l2 = b.l2, lSgn = b.lSgn)
 
-  /** The sums and extrema alone: the order-dependent fields zeroed. */
-  def orderless: TokenState =
-    TokenState.empty.copy(n = n, s1 = s1, s2 = s2, s3 = s3, s4 = s4,
-      mn = mn, mx = mx)
+  /** The orderless part: every field but the edges. */
+  def sums: TokenSums =
+    TokenSums(n, s1, s2, s3, s4, mn, mx, sumAbsD, sumDSq, sumESq, zc)
 }
 
 object TokenState {
@@ -63,4 +63,33 @@ object TokenState {
       zc = s.zc + (if (fSgn == 0 && lSgn != 0) 1 else 0) +
         (if (fSgn * lSgn < 0) 1 else 0))
   }
+}
+
+/** A `TokenState` without its edges (f1, f2, l1, l2, fSgn, lSgn): the
+  * sums, extrema and zero-crossing count, which `+` merges in any order
+  * with the same arithmetic as `TokenState.+`. The stateful streaming tier
+  * keeps one per window and takes the edges from its sorted rows. */
+final case class TokenSums(n: Long, s1: Double, s2: Double, s3: Double,
+                           s4: Double, mn: Double, mx: Double, sumAbsD: Double,
+                           sumDSq: Double, sumESq: Double, zc: Long) {
+
+  def +(b: TokenSums): TokenSums =
+    TokenSums(n + b.n, s1 + b.s1, s2 + b.s2, s3 + b.s3, s4 + b.s4,
+      math.min(mn, b.mn), math.max(mx, b.mx), sumAbsD + b.sumAbsD,
+      sumDSq + b.sumDSq, sumESq + b.sumESq, zc + b.zc)
+
+  /** The state with these sums and the given edges. */
+  def withEdges(f1: Double, f2: Double, l1: Double, l2: Double, fSgn: Int,
+                lSgn: Int): TokenState =
+    TokenState(n, s1, s2, s3, s4, mn, mx, sumAbsD, sumDSq, sumESq,
+      f1, f2, l1, l2, zc, fSgn, lSgn)
+
+  /** The sums and extrema alone: the order-dependent fields zeroed. */
+  def orderless: TokenState =
+    TokenState.empty.copy(n = n, s1 = s1, s2 = s2, s3 = s3, s4 = s4,
+      mn = mn, mx = mx)
+}
+
+object TokenSums {
+  val empty: TokenSums = TokenState.empty.sums
 }

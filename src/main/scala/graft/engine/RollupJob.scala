@@ -4,7 +4,7 @@ import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionSer
   Executors, Future => JFuture, TimeUnit}
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{dod_encode, gorilla_encode}
@@ -21,14 +21,17 @@ import graft.table.TableIO
   *   state struct `P`, so a coarser tier cascades from finer states
   *   without touching raw data — the incremental re-aggregation the
   *   north rule asks for.
-  * - Stage, then publish. A run first builds every tier's fresh
-  *   bucket-states (tier T+1 cascades from tier T's persisted fresh
-  *   states; only days already committed at T are read back from the
-  *   table), then stages all tiers' feature writes, chunk writes and
-  *   lineage collects concurrently (a tier's collect fills its cache
-  *   before its writes and the coarser tier's collect read it), then
-  *   publishes them in manifest order: per tier features -> lineage ->
-  *   chunks, tiers finest first.
+  * - One ordered pass builds every tier (TierFold). Each pending day
+  *   enters at its finest pending tier: as row states, or (crash repair:
+  *   done at the finer tier, pending here) as its committed finer-tier
+  *   states read back from the table. One range exchange and sort feed
+  *   one `mapPartitions` fold that emits the 1m, 1h and 1d states
+  *   together; the buckets a partition edge cuts are made exact on the
+  *   driver from the edge rows, the fold's first action.
+  * - Stage, then publish. Every tier's feature write and chunk write and
+  *   the one lineage collect over all tiers are staged concurrently from
+  *   the persisted fold, then published in manifest order: per tier
+  *   features -> lineage -> chunks, tiers finest first.
   *   In that order a crash can at worst duplicate lineage on the re-run,
   *   never leave a done day without lineage rows; a failed staging
   *   publishes nothing. The run holds the table's commit lock
@@ -63,13 +66,6 @@ object RollupJob {
   private def dayOf(c: org.apache.spark.sql.Column) =
     floor(unix_timestamp(c) / 86400L).cast("long") * 86400L
 
-  private val StateCols = Seq("source", "bucket", "P", "rows_in", "tokens_in").map(col)
-
-  /** One tier's pending days and their fresh bucket-states (None when
-    * nothing is pending). */
-  private final case class TierPlan(tier: String, pending: Seq[Long],
-                                    states: Option[DataFrame])
-
   /** Spark actions run concurrently, each on its own pool thread under
     * one job group. `awaitAll` returns once all succeeded; on the first
     * failure it cancels the group (and any job the group submits later),
@@ -87,13 +83,6 @@ object RollupJob {
           try body finally sc.clearJobGroup()
         }
       }).asInstanceOf[JFuture[T]]
-    }
-
-    /** `body`, started once `dep` has succeeded; a failed `dep` fails this
-      * action with the same cause. */
-    def after[T](dep: Option[JFuture[_]])(body: => T): JFuture[T] = apply {
-      dep.foreach(d => try d.get() catch { case e: ExecutionException => throw e.getCause })
-      body
     }
 
     def awaitAll(): Unit = try {
@@ -132,71 +121,84 @@ object RollupJob {
     try io.locked {
       val allDays = tokens.select(dayOf(col("event_time")).as("d"))
         .distinct().collect().map(_.getLong(0)).sorted.toSeq
-      lazy val states = persisted(TokenRollup.rowStates(tokens, conf.scale)
-        .withColumn("day", dayOf(col("event_time"))))
-
-      // 1. every tier's fresh bucket-states, before anything is published
-      val plans = conf.tiers.foldLeft(Vector.empty[TierPlan]) {
-        case (acc, (tierName, win)) =>
-          // A day is done only when BOTH of its commits landed (features,
-          // then chunks). A crash between the two leaves the day pending,
-          // so the resume re-runs it — the feature re-commit is
-          // last-commit-wins on the same bucket, keeping the documented
-          // idempotence contract.
-          val done = io.doneBuckets(tierName)
-            .intersect(io.doneBuckets(s"$tierName-chunks"))
-          val pending = allDays.filterNot(done.contains)
-          // the finer tier's states for these days: its fresh states where
-          // it is pending too, else (crash repair: done at the finer tier,
-          // pending here) its committed rows, read manifest-pruned
-          val finer = acc.lastOption.flatMap { f =>
-            val (shared, repair) = pending.partition(f.pending.contains)
-            val fresh = if (shared.isEmpty) None else f.states.map(
-              _.where(dayOf(col("bucket")).isin(shared: _*)).select(StateCols: _*))
-            val committed = if (repair.isEmpty) None else
-              io.readRange(spark, f.tier, repair.min, repair.max + 1).map(
-                _.where(col("commit_bucket").isin(repair: _*)).select(StateCols: _*))
-            (fresh ++ committed).reduceOption(_ unionByName _)
-          }
-          acc :+ TierPlan(tierName, pending, if (pending.isEmpty) None else Some(
-            persisted(finer match {
-              case Some(fs) => TokenRollup.cascade(fs, win)
-              // no finer input at all (first tier, or nothing visible)
-              case None =>
-                TokenRollup.mergeToBuckets(states.where(col("day").isin(pending: _*)),
-                  win, Seq("event_time", "doc_id"))
-            })))
+      // A day is done only when BOTH of its commits landed (features, then
+      // chunks). A crash between the two leaves the day pending, so the
+      // resume re-runs it — the feature re-commit is last-commit-wins on
+      // the same bucket, keeping the documented idempotence contract.
+      val pending = conf.tiers.map { case (tierName, _) =>
+        val done = io.doneBuckets(tierName)
+          .intersect(io.doneBuckets(s"$tierName-chunks"))
+        allDays.filterNot(done.contains)
       }
 
-      // 2. stage every tier's lineage and writes concurrently, in a fixed
-      // pipeline: a tier's lineage collect is the first action over its
-      // persisted states and starts only after the finer tier's collect
-      // has filled that tier's cache; its two writes start after it. So
-      // each cache is computed by one job, never by racing consumers, and
-      // a tier's writes overlap the coarser tiers' collects.
+      // 1. the fold's units: each day enters at its finest pending tier k,
+      // as its committed tier-(k-1) states read back manifest-pruned (crash
+      // repair), else as row states at level 0
+      val entryDays = allDays.groupBy(d => pending.indexWhere(_.contains(d)))
+        .removed(-1).toSeq.sortBy(_._1)
+      // persisted: the range sampler and the exchange read the row states
+      // once, so the kernel runs once per row
+      lazy val rowStates = persisted(TokenRollup.rowStates(tokens, conf.scale)
+        .withColumn("day", dayOf(col("event_time"))))
+      // buckets keep the input's timestamp type (TIMESTAMP or _NTZ)
+      val tsType = tokens.schema("event_time").dataType
+      val units = entryDays.map { case (k, days) =>
+        val committed = if (k == 0) None else
+          io.readRange(spark, conf.tiers(k - 1)._1, days.min, days.max + 1).map(df =>
+            df.where(col("commit_bucket").isin(days: _*))
+              .select(col("source"),
+                TierFold.toMicros(col("bucket"), df.schema("bucket").dataType).as("ts"),
+                lit("").as("doc_id"), lit(k).as("level"), col("P"),
+                col("rows_in").as("rows"), col("tokens_in").as("tokens")))
+        committed.getOrElse(rowStates.where(col("day").isin(days: _*))
+          .select(col("source"), TierFold.toMicros(col("event_time"), tsType).as("ts"),
+            col("doc_id"), lit(0).as("level"), col("P"), lit(1L).as("rows"),
+            col("row_tokens").as("tokens")))
+      }
+
+      // 2. one fold builds every tier; its edge collect is the first action
+      // and fills the cache. The driver makes the cut buckets exact.
+      val wins = conf.tiers.map { case (_, win) => TierFold.micros(win) }
+      val states = units.reduceOption(_ unionByName _).map { u =>
+        val fold = persisted(TierFold(u, wins, pending.map(_.toSet)))
+        val edgeRows = fold.where(col("edge") || col("child"))
+          .as(Encoders.product[TierFold.Piece]).collect().toSeq
+        TierFold.onEdges(fold, edgeRows)
+        val edges = spark.createDataset(TierFold.combine(edgeRows, wins).filter(_.out))(
+          Encoders.product[TierFold.Piece]).toDF()
+        fold.where(col("out") && !col("edge")).unionByName(edges)
+          .select(col("level"), col("source"),
+            TierFold.fromMicros(col("bucket"), tsType).as("bucket"),
+            col("P"), col("rows_in"), col("tokens_in"))
+      }
+
+      // 3. stage every tier's two writes and the one lineage collect
+      // concurrently over the filled cache, under one job group
       val group = s"graft-rollup-${conf.jobId}-${java.util.UUID.randomUUID()}"
       val stage = new Concurrently(spark.sparkContext, group)
-      var finerLineage: Option[JFuture[_]] = None
-      val staged = plans.map(p => p.states.map { bucketStates =>
-        val feats = TokenRollup.finalizeFeatures(bucketStates)
-          .withColumn("commit_bucket", dayOf(col("bucket")))
-        val lineage = stage.after(finerLineage)(feats.groupBy(col("commit_bucket"))
-          .agg(count(lit(1)).as("points"), sum("tokens_in").as("tokens"),
-            sum(hash(col("source"), col("bucket"),
-              graft.functions.duckRound(col("mean"), 9)).cast("long")).as("chk"))
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1),
-            if (r.isNullAt(2)) 0L else r.getLong(2), r.getLong(3).toHexString))
-          .toSeq)
-        finerLineage = Some(lineage)
+      val feats = states.toSeq.flatMap(s => conf.tiers.indices.filter(pending(_).nonEmpty)
+        .map(j => j -> TokenRollup.finalizeFeatures(s.where(col("level") === j))
+          .withColumn("commit_bucket", dayOf(col("bucket")))))
+      val lineage = stage(feats.map { case (j, f) =>
+        f.select(lit(j).as("tier"), col("commit_bucket"), col("tokens_in"),
+          hash(col("source"), col("bucket"),
+            graft.functions.duckRound(col("mean"), 9)).cast("long").as("h"))
+      }.reduceOption(_ union _).toSeq.flatMap(_.groupBy(col("tier"), col("commit_bucket"))
+        .agg(count(lit(1)).as("points"), sum("tokens_in").as("tokens"), sum("h").as("chk"))
+        .collect()
+        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2),
+          if (r.isNullAt(3)) 0L else r.getLong(3), r.getLong(4).toHexString)))
+        .groupMap(_._1)(_._2))
+      val staged = feats.map { case (j, f) =>
+        val tier = conf.tiers(j)._1
         // One file per write task. The rebalance sizes the files (AQE
         // coalesces toward advisoryPartitionSizeInBytes): a metadata-sized
         // tier lands as one file, the 1m tier at scale as size-targeted
         // files, not a sliver per upstream task. The sorts keep each
         // source's rows contiguous, so parquet min/max prune on `source`.
-        val featsW = stage.after(Some(lineage))(io.stage(p.tier,
-          feats.hint("rebalance", "source").sortWithinPartitions("source", "bucket")))
-        val ordered = feats
+        val featsW = stage(io.stage(tier,
+          f.hint("rebalance", "source").sortWithinPartitions("source", "bucket")))
+        val ordered = f
           .withColumn("bs", unix_timestamp(col("bucket")))
           .groupBy(col("source"), col("commit_bucket"))
           .agg(sort_array(collect_list(struct((Seq("bs") ++ conf.chunkFeatures)
@@ -206,21 +208,21 @@ object RollupJob {
             dod_encode(col("pts.bs")).as("ts_dod")) ++
             conf.chunkFeatures.map(c =>
               gorilla_encode(col(s"pts.$c")).as(s"${c}_gor")): _*)
-        val chunksW = stage.after(Some(lineage))(io.stage(s"${p.tier}-chunks",
+        val chunksW = stage(io.stage(s"$tier-chunks",
           chunks.sortWithinPartitions("source", "commit_bucket")))
-        (featsW, lineage, chunksW)
-      })
+        j -> (featsW, chunksW)
+      }.toMap
       stage.awaitAll()
 
-      // 3. publish in manifest order
-      val results = plans.zip(staged).map { case (p, writes) =>
-        writes.fold(TierResult(p.tier, Nil, 0)) {
-          case (featsW, lineage, chunksW) =>
-            io.publish(featsW.get(), p.pending, conf.jobId)
-            io.appendLineage(conf.jobId, p.tier, lineage.get())
-            io.publish(chunksW.get(), p.pending, conf.jobId)
-            // tier point count = the lineage rows' points summed
-            TierResult(p.tier, p.pending, lineage.get().map(_._2).sum)
+      // 4. publish in manifest order: per tier features -> lineage -> chunks
+      val results = conf.tiers.zipWithIndex.map { case ((tier, _), j) =>
+        staged.get(j).fold(TierResult(tier, Nil, 0)) { case (featsW, chunksW) =>
+          val rows = lineage.get().getOrElse(j, Nil)
+          io.publish(featsW.get(), pending(j), conf.jobId)
+          io.appendLineage(conf.jobId, tier, rows)
+          io.publish(chunksW.get(), pending(j), conf.jobId)
+          // tier point count = the lineage rows' points summed
+          TierResult(tier, pending(j), rows.map(_._2).sum)
         }
       }
 

@@ -11,7 +11,9 @@ import graft.functions.{token_partials, feature, FeatureParams, TokenPartialsExp
   * feature points at cascading retention tiers — the north rule's
   * raw -> 1m -> 1h -> 1d rollup.
   *
-  * Execution shape (scale rationale):
+  * Execution shape of the Column form (`mergeToBuckets`/`cascade`, which
+  * the streaming fallback and the tier queries run; `RollupJob` builds all
+  * tiers in one ordered pass instead, see TierFold):
   *  - one narrow projection computes the per-row state (no explode; the
   *    token array never leaves the row),
   *  - one shuffle per tier level, on (source, bucket) — the window-lag

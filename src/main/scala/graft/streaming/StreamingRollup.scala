@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.core.TokenState
+import graft.core.{TokenState, TokenSums}
 import graft.functions.token_partials
 
 /** Structured Streaming face of the tier engine: one stateful tier over
@@ -21,14 +21,14 @@ object StreamingRollup {
   /** Stateful tier (r3): the cross-row boundary bridge under
     * incremental processing. flatMapGroupsWithState carries, per (source,
     * window), the per-row BOUNDARY tuples (first/last two samples + edge
-    * signs, in row order) plus the running orderless merge (`+`) of the
-    * row states; each trigger re-derives the bridge terms from the sorted
-    * boundaries — so line_length, Hjorth and zero-crossings come out
-    * EXACTLY equal to the batch cascade regardless of arrival order, which
-    * a watermarked groupBy (orderless) cannot do. State is
-    * O(rows-in-window) boundary tuples, capped by `maxSegs` (hotter
-    * windows belong to the batch cascade); windows evict on event-time
-    * timeout one watermark past the window end.
+    * signs, in row order) plus the running orderless merge of the row
+    * states' sums (`TokenSums`, no edges); each trigger re-derives the
+    * bridge terms from the sorted boundaries — so line_length, Hjorth and
+    * zero-crossings come out EXACTLY equal to the batch cascade regardless
+    * of arrival order, which a watermarked groupBy (orderless) cannot do.
+    * State is O(rows-in-window) boundary tuples, capped by `maxSegs`
+    * (hotter windows belong to the batch cascade); windows evict on
+    * event-time timeout one watermark past the window end.
     *
     * Incremental state (r4): `segs` is kept SORTED as a state invariant —
     * each trigger sorts only its own k arrivals and two-pointer-merges
@@ -83,13 +83,13 @@ object StreamingRollup {
             Iterator.empty
           } else {
             var st = state.getOption.getOrElse(
-              St(Vector.empty, TokenState.empty, 0L, 0L, overflowed = false))
+              St(Vector.empty, TokenSums.empty, 0L, 0L, overflowed = false))
             val freshB = Vector.newBuilder[Seg]
             it.foreach { r =>
               val p = r.P
               freshB += Seg(r.ts, r.doc_id, p.f1, p.f2, p.l1, p.l2,
                 p.fSgn, p.lSgn)
-              st = st.copy(acc = st.acc + p, rowsIn = st.rowsIn + 1,
+              st = st.copy(acc = st.acc + p.sums, rowsIn = st.rowsIn + 1,
                 tokensIn = st.tokensIn + r.rowTokens)
             }
             val fresh = freshB.result()
@@ -110,18 +110,18 @@ object StreamingRollup {
               (key._2 * 1000L) + winMillis + wmMillis,
               state.getCurrentWatermarkMs() + 1))
             val p = if (st.overflowed) st.acc.orderless else {
-              // arrival-order sums, then the bridge terms in sorted order
+              // arrival-order sums with the sorted edges, then the bridge
+              // terms in sorted order
               val s = st.segs
-              var b = st.acc
+              val h = s.head; val l = s.last
+              var b = st.acc.withEdges(h.f1, h.f2, l.l1, l.l2, h.fSgn, l.lSgn)
               var i = 1
               while (i < s.length) {
                 val x = s(i - 1); val y = s(i)
                 b = TokenState.bridge(b, x.l1, x.l2, x.lSgn, y.f1, y.f2, y.fSgn)
                 i += 1
               }
-              val h = s.head; val l = s.last
-              b.copy(f1 = h.f1, f2 = h.f2, l1 = l.l1, l2 = l.l2,
-                fSgn = h.fSgn, lSgn = l.lSgn)
+              b
             }
             Iterator.single(Out(key._1, key._2, p, st.rowsIn, st.tokensIn,
               st.overflowed))
@@ -227,7 +227,7 @@ object StreamingRollup {
 object StreamingDiff {
   final case class Seg(ts: Long, docId: String, f1: Double, f2: Double,
                        l1: Double, l2: Double, fSgn: Int, lSgn: Int)
-  final case class St(segs: Vector[Seg], acc: TokenState, rowsIn: Long,
+  final case class St(segs: Vector[Seg], acc: TokenSums, rowsIn: Long,
                       tokensIn: Long, overflowed: Boolean)
   final case class In(source: String, bucketS: Long, ts: Long,
                       doc_id: String, event_time: java.sql.Timestamp,

@@ -96,6 +96,24 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(hashExchanges <= 2, s"tier plan shuffled $hashExchanges times:\n$p")
   }
 
+  test("tier fold: RollupJob's states come from one range exchange, no Window") {
+    spark.sparkContext.setLogLevel("ERROR")
+    var fold: org.apache.spark.sql.DataFrame = null
+    graft.engine.TierFold.onEdges = (f, _) => fold = f
+    try graft.engine.RollupJob.run(spark,
+      graft.gen.TokenGen.bulk(spark, 200, nSources = 4, minLen = 16, maxLen = 64),
+      graft.engine.RollupJob.Conf(
+        tableRoot = java.nio.file.Files.createTempDirectory("graft_plan").toString))
+    finally graft.engine.TierFold.onEdges = (_, _) => ()
+    // the run has released its cache, so this is the fold's own plan
+    val p = fold.queryExecution.executedPlan.toString
+    val exchanges = "Exchange ".r.findAllMatchIn(p).size
+    val ranges = "Exchange rangepartitioning\\(source".r.findAllMatchIn(p).size
+    assert(exchanges == 1 && ranges == 1,
+      s"the fold must shuffle once, by range on source:\n$p")
+    assert(!p.contains("Window"), s"no Window in the tier fold:\n$p")
+  }
+
   test("sequence packing: the data-sized running sum is per-(source, " +
     "range-partition), never a per-source single-task window") {
     val p = plan("q_pack_sequences")
