@@ -29,10 +29,7 @@ final case class TokenState(n: Long, s1: Double, s2: Double, s3: Double,
 
   def +(b: TokenState): TokenState = {
     val e = if (n == 0) b else this
-    TokenState(n + b.n, s1 + b.s1, s2 + b.s2, s3 + b.s3, s4 + b.s4,
-      math.min(mn, b.mn), math.max(mx, b.mx), sumAbsD + b.sumAbsD,
-      sumDSq + b.sumDSq, sumESq + b.sumESq, e.f1, e.f2, e.l1, e.l2,
-      zc + b.zc, e.fSgn, e.lSgn)
+    (sums + b.sums).withEdges(e.f1, e.f2, e.l1, e.l2, e.fSgn, e.lSgn)
   }
 
   def ++(b: TokenState): TokenState =
@@ -66,9 +63,10 @@ object TokenState {
 }
 
 /** A `TokenState` without its edges (f1, f2, l1, l2, fSgn, lSgn): the
-  * sums, extrema and zero-crossing count, which `+` merges in any order
-  * with the same arithmetic as `TokenState.+`. The stateful streaming tier
-  * keeps one per window and takes the edges from its sorted rows. */
+  * sums, extrema and zero-crossing count, which `+` merges in any order;
+  * `TokenState.+` is this `+` with the left run's edges. The stateful
+  * streaming tier keeps one per window and takes the edges from its
+  * sorted rows. */
 final case class TokenSums(n: Long, s1: Double, s2: Double, s3: Double,
                            s4: Double, mn: Double, mx: Double, sumAbsD: Double,
                            sumDSq: Double, sumESq: Double, zc: Long) {

@@ -24,10 +24,11 @@ import graft.table.TableIO
   * - One ordered pass builds every tier (TierFold). Each pending day
   *   enters at its finest pending tier: as row states, or (crash repair:
   *   done at the finer tier, pending here) as its committed finer-tier
-  *   states read back from the table. One range exchange and sort feed
-  *   one `mapPartitions` fold that emits the 1m, 1h and 1d states
-  *   together; the buckets a partition edge cuts are made exact on the
-  *   driver from the edge rows, the fold's first action.
+  *   states read back from the table. One range exchange on (source,
+  *   minute) and one sort feed one `mapPartitions` fold that emits the
+  *   1m, 1h and 1d states together. No minute is cut; the hours and days
+  *   a partition edge cuts are rebuilt on the driver from their children,
+  *   collected by the fold's first action.
   * - Stage, then publish. Every tier's feature write and chunk write and
   *   the one lineage collect over all tiers are staged concurrently from
   *   the persisted fold, then published in manifest order: per tier

@@ -2,7 +2,6 @@ package graft.engine
 
 import scala.collection.mutable.{ArrayBuffer, Queue}
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.catalyst.expressions.PreciseTimestampConversion
 import org.apache.spark.sql.catalyst.util.IntervalUtils
@@ -14,11 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.core.TokenState
 
 /** One ordered pass builds every tier: the units are range-partitioned
-  * once on (source, ts, doc_id) and sorted within partitions, and one
-  * `mapPartitions` fold emits the 1m, 1h and 1d bucket states together
-  * (*Factor Windows*, ICDE 2022: correlated window sizes share one scan and
-  * one sort). A range split also spreads a hot (source, minute) over
-  * several tasks.
+  * once on (source, 1m bucket) and sorted within partitions on (source,
+  * ts, doc_id), and one `mapPartitions` fold emits the 1m, 1h and 1d
+  * bucket states together (*Factor Windows*, ICDE 2022: correlated window
+  * sizes share one scan and one sort).
   *
   * Units. A unit enters at a level: a row state at level 0, a committed
   * tier-(k-1) state at level k (a day whose finest pending tier is k; its
@@ -30,20 +28,15 @@ import graft.core.TokenState
   * it is emitted, so a task buffers at most the fan-out (60 minutes, 24
   * hours), never a partition.
   *
-  * Edges. Each partition flags its first and last bucket at every level
+  * Edges. The range key never cuts a minute, so every 1m state is the
+  * sequential fold of its rows in one task, whatever the range bounds.
+  * Each partition flags its first and last bucket at every coarser level
   * (`edge`) and the children of those buckets (`child`); the driver
-  * collects them and `combine` makes them exact: 1m pieces are joined with
-  * `++` in partition order, and every flagged coarser bucket is rebuilt as
-  * the in-order `++` of its complete children. Joining coarser pieces
-  * directly would reassociate the summed fields, and a repair from
-  * committed 1m states would then differ from a clean run in the last
-  * bits.
-  *
-  * Where the cut falls inside a minute, that minute's summed fields depend
-  * on the cut. Range bounds come from Spark's sampler: they depend on the
-  * input alone while each input partition fits its sample (the reservoir
-  * keeps every row), and can move between runs beyond that; integer
-  * tokens with |t| < 2^10 are exact under any cut.
+  * collects them and `combine` rebuilds every flagged bucket as the
+  * in-order `++` of its complete children. Joining coarser pieces directly
+  * would reassociate the summed fields: the result would then depend on
+  * where the cuts fall, and a repair from committed 1m states would differ
+  * from a clean run in the last bits.
   */
 private[graft] object TierFold {
 
@@ -52,12 +45,12 @@ private[graft] object TierFold {
                          P: TokenState, rows: Long, tokens: Long)
 
   /** A tier-`level` bucket state (bucket start in epoch micros). `out`:
-    * its day is pending at that tier; `edge`: first or last at its level
-    * in partition `part`, so possibly partial; `child`: its parent is an
+    * its day is pending at that tier; `edge`: a coarser bucket first or
+    * last in its partition, so possibly partial; `child`: its parent is an
     * edge. */
   final case class Piece(level: Int, source: String, bucket: Long, P: TokenState,
                          rows_in: Long, tokens_in: Long, out: Boolean,
-                         edge: Boolean, child: Boolean, part: Int)
+                         edge: Boolean, child: Boolean)
 
   private val DayMicros = 86400L * 1000000L
 
@@ -75,7 +68,8 @@ private[graft] object TierFold {
     ColumnBridge.column(PreciseTimestampConversion(ColumnBridge.expression(c), LongType, t))
 
   /** Called with each run's fold output and the edge rows the driver
-    * collected (tests observe cuts through it). */
+    * collected (tests observe cuts through it: a cut bucket has an edge
+    * piece from each partition it spans). */
   @volatile private[graft] var onEdges: (DataFrame, Seq[Piece]) => Unit = (_, _) => ()
 
   /** Fold `units` (source, ts, doc_id, level, P, rows, tokens) into every
@@ -84,33 +78,30 @@ private[graft] object TierFold {
   def apply(units: DataFrame, wins: Seq[Long], pending: Seq[Set[Long]]): DataFrame = {
     val w = wins.toArray
     val p = pending.toArray
-    units.repartitionByRange(col("source"), col("ts"), col("doc_id"))
+    units.repartitionByRange(col("source"), col("ts") - pmod(col("ts"), lit(w(0))))
       .sortWithinPartitions("source", "ts", "doc_id")
       .as(Encoders.product[Entry])
-      .mapPartitions(it => new Fold(w, p, TaskContext.getPartitionId()).run(it))(
-        Encoders.product[Piece])
+      .mapPartitions(it => new Fold(w, p).run(it))(Encoders.product[Piece])
       .toDF()
   }
 
   /** The exact state of every edge bucket, from the collected edge and
-    * child rows: 1m pieces joined in partition order, each coarser edge
-    * rebuilt from its children, finest level first. */
+    * child rows: each rebuilt from its children, finest level first. 1m
+    * pieces are never cut, so they enter whole. */
   def combine(rows: Seq[Piece], wins: Seq[Long]): Seq[Piece] = {
-    def join(ps: Seq[Piece]): Piece = ps.reduceLeft((a, b) => a.copy(P = a.P ++ b.P,
-      rows_in = a.rows_in + b.rows_in, tokens_in = a.tokens_in + b.tokens_in))
     val byLevel = rows.groupBy(_.level)
     val edges = ArrayBuffer.empty[Piece]
-    var finer = Seq.empty[Piece]
-    for (j <- wins.indices) {
+    var finer = byLevel.getOrElse(0, Nil)
+    for (j <- 1 until wins.length) {
       val kids = finer.groupBy(k => (k.source, Math.floorDiv(k.bucket, wins(j)) * wins(j)))
       finer = byLevel.getOrElse(j, Nil).groupBy(p => (p.source, p.bucket)).toSeq.map {
         case (_, Seq(one)) if !one.edge => one
         case (key, ps) =>
-          val whole = if (j == 0) join(ps.sortBy(_.part)) else {
-            val ks = kids.getOrElse(key, sys.error(s"edge bucket $key at tier $j has no children"))
-            join(ks.sortBy(_.bucket)).copy(level = j, source = key._1, bucket = key._2)
-          }
-          val e = whole.copy(out = ps.head.out, edge = true)
+          val ks = kids.getOrElse(key, sys.error(s"edge bucket $key at tier $j has no children"))
+            .sortBy(_.bucket)
+          val e = Piece(j, key._1, key._2, ks.map(_.P).reduceLeft(_ ++ _),
+            ks.map(_.rows_in).sum, ks.map(_.tokens_in).sum, ps.head.out,
+            edge = true, child = false)
           edges += e
           e
       }
@@ -119,7 +110,7 @@ private[graft] object TierFold {
   }
 
   /** The per-partition fold over sorted entries. */
-  private final class Fold(wins: Array[Long], pending: Array[Set[Long]], part: Int) {
+  private final class Fold(wins: Array[Long], pending: Array[Set[Long]]) {
     private final class Open(val source: String, val start: Long, var p: TokenState,
                              var rows: Long, var tokens: Long, val first: Boolean) {
       val kids = ArrayBuffer.empty[Piece]
@@ -134,11 +125,11 @@ private[graft] object TierFold {
     private def close(j: Int, last: Boolean): Unit = {
       val o = open(j)
       open(j) = null
-      val edge = o.first || last
+      val edge = j > 0 && (o.first || last)
       o.kids.foreach(k => emit(k.copy(child = edge)))
       val day = Math.floorDiv(o.start, DayMicros) * 86400L
       val piece = Piece(j, o.source, o.start, o.p, o.rows, o.tokens,
-        pending(j)(day), edge, child = false, part)
+        pending(j)(day), edge, child = false)
       if (j + 1 < n) feed(j + 1, piece) else emit(piece)
     }
 
@@ -165,7 +156,7 @@ private[graft] object TierFold {
       var j = 0
       while (j < e.level) { if (open(j) != null) close(j, last = false); j += 1 }
       feed(e.level, Piece(e.level - 1, e.source, e.ts, e.P, e.rows, e.tokens,
-        out = false, edge = false, child = false, part))
+        out = false, edge = false, child = false))
     }
 
     def run(in: Iterator[Entry]): Iterator[Piece] = new Iterator[Piece] {

@@ -39,19 +39,26 @@ class TierFoldSpec extends AnyFunSuite {
     finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
-  /** Run RollupJob and return the edge rows its fold collected. */
+  /** Run RollupJob and return the edge rows its fold collected; asserts
+    * that the fold emitted each minute once, from one task. */
   private def runJob(tokens: DataFrame, conf: RollupJob.Conf): Seq[TierFold.Piece] = {
     var edges = Seq.empty[TierFold.Piece]
-    TierFold.onEdges = (_, e) => edges = e
+    var split = -1L
+    TierFold.onEdges = { (fold, e) =>
+      edges = e
+      split = fold.where(col("level") === 0).groupBy("source", "bucket").count()
+        .where(col("count") > 1).count()
+    }
     try RollupJob.run(spark, tokens, conf) finally TierFold.onEdges = (_, _) => ()
+    assert(split == 0, s"$split minutes came from more than one fold task")
     edges
   }
 
   /** (level, source, bucket) of every bucket whose pieces came from at
-    * least two fold partitions. */
+    * least two fold partitions: each partition it spans flags it an edge. */
   private def cuts(edges: Seq[TierFold.Piece]): Set[(Int, String, Long)] =
     edges.filter(_.edge).groupBy(p => (p.level, p.source, p.bucket))
-      .collect { case (k, ps) if ps.map(_.part).distinct.size >= 2 => k }.toSet
+      .collect { case (k, ps) if ps.size >= 2 => k }.toSet
 
   /** Rows at `perMinute` seconds-spread slots of the given minutes of
     * hours 0, 5 and 23 on two days, for two sources; 2-20 tokens each. */
@@ -146,7 +153,7 @@ class TierFoldSpec extends AnyFunSuite {
       val edges = withPartitions(16)(runJob(tokens,
         RollupJob.Conf(tableRoot = root, scale = scale)))
       val cut = cuts(edges).map(_._1)
-      assert(Set(0, 1, 2).subsetOf(cut), s"cuts only at levels $cut")
+      assert(cut == Set(1, 2), s"cuts at levels $cut")
       val got = tableStates(root)
       assertSame(got, columnStates(tokens, scale))
       assertLeftFolds(got)
@@ -163,7 +170,7 @@ class TierFoldSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_fold_full").toString
     val edges = withPartitions(16)(runJob(tokens,
       RollupJob.Conf(tableRoot = root, scale = scale)))
-    assert(Set(0, 1, 2).subsetOf(cuts(edges).map(_._1)))
+    assert(cuts(edges).map(_._1) == Set(1, 2))
     // per (tier, bucket) sums of |x|^p, the bound's scale for s1..s4
     val mags = Wins.map(TierFold.micros).map { w =>
       docs.groupBy(d => (d.source, Math.floorDiv(d.event_time.getTime * 1000L, w) * w))
@@ -180,11 +187,10 @@ class TierFoldSpec extends AnyFunSuite {
     "pending only at 1h/1d over its committed 1m equal a clean run") {
     spark.sparkContext.setLogLevel("ERROR")
     val scale = 1.0 / (1 << 24)
-    // day A: many rows per minute, |t| < 2^10, so its minutes are exact
-    // under any cut; day B: one full-range row per (source, minute), so
-    // its 1m states do not depend on cuts and its hours do on the order
-    // of their left fold
-    val dayA = corpus(Seq(0, 1, 17, 30, 59), 12, small, days = Seq(0))
+    // full-range tokens: day A many rows per minute, day B one row per
+    // (source, minute), so B's hours depend on the order of their left
+    // fold
+    val dayA = corpus(Seq(0, 1, 17, 30, 59), 12, full, days = Seq(0))
     val dayB = corpus(0 until 60 by 2, 1, full, days = Seq(1), seed = 9L)
     val both = frame(dayA ++ dayB)
     val clean = Files.createTempDirectory("graft_mixed_clean").toString
@@ -218,26 +224,26 @@ class TierFoldSpec extends AnyFunSuite {
     }
   }
 
-  test("skew soak: a hot minute holding half the rows spreads over several " +
-    "fold partitions and still equals the Column form") {
+  test("full-range tokens, more rows per input partition than the range " +
+    "sampler keeps: two partition counts give the same tiers bit for bit") {
     spark.sparkContext.setLogLevel("ERROR")
     val scale = 1.0 / (1 << 24)
-    val rng = new SplitMix64(3L)
-    val hot = (0 until 600).map { i =>
-      val toks = Array.fill(2 + rng.nextInt(19))(small(rng))
-      Doc(f"hot/$i%04d", toks, toks.length, "s0",
-        new java.sql.Timestamp((T0 + 5 * 3600L + 7 * 60L) * 1000L + i * 50L))
+    val tokens = frame(corpus(0 until 60, 4, full, seed = 13L))
+    val inParts = tokens.rdd.getNumPartitions
+    val runs = Seq(16, 5).map { n =>
+      // RangePartitioner samples ~3 x 20 x n / inParts rows per input
+      // partition; beyond that the bounds move with the sampler's seed
+      assert(tokens.count() / inParts > math.ceil(3.0 * 20 * n / inParts),
+        "the input partitions must outgrow the sample")
+      val root = Files.createTempDirectory(s"graft_fold_p$n").toString
+      val edges = withPartitions(n)(runJob(tokens,
+        RollupJob.Conf(tableRoot = root, scale = scale)))
+      (cuts(edges), tableStates(root))
     }
-    val cold = corpus(Seq(3, 7, 40), 8, small, seed = 11L)
-    assert(hot.size >= cold.size)
-    val tokens = frame(hot ++ cold)
-    val root = Files.createTempDirectory("graft_skew").toString
-    val edges = withPartitions(8)(runJob(tokens,
-      RollupJob.Conf(tableRoot = root, scale = scale)))
-    val hotKey = (0, "s0", (T0 + 5 * 3600L + 7 * 60L) * 1000000L)
-    val parts = edges.filter(p => (p.level, p.source, p.bucket) == hotKey).map(_.part).distinct
-    assert(parts.size >= 2, s"the hot minute came from partitions $parts")
-    assertSame(tableStates(root), columnStates(tokens, scale))
+    assert(runs.forall(_._1.map(_._1) == Set(1, 2)) && runs(0)._1 != runs(1)._1,
+      s"cuts ${runs.map(_._1.size)}")
+    assertSame(runs(0)._2, runs(1)._2)
+    assertLeftFolds(runs(0)._2)
   }
 }
 

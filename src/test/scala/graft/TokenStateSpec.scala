@@ -105,19 +105,6 @@ class TokenStateSpec extends AnyFunSuite {
     })
   }
 
-  test("TokenSums + is TokenState + without the edges, bit-exact at full range") {
-    val k = kernel(1.0 / (1 << 24)) _
-    val run = Gen.choose(2, 40).flatMap(n =>
-      Gen.containerOfN[Array, Int](n, Gen.choose(Int.MinValue, Int.MaxValue)))
-    check(Prop.forAll(run, run) { (x, y) =>
-      val (a, b) = (k(x), k(y))
-      val sum = bitDiff((a.sums + b.sums).withEdges(a.f1, a.f2, a.l1, a.l2, a.fSgn, a.lSgn),
-        a + b)
-      val edges = bitDiff(a.sums.withEdges(a.f1, a.f2, a.l1, a.l2, a.fSgn, a.lSgn), a)
-      Prop(sum.isEmpty && edges.isEmpty) :| s"a + b $sum, withEdges $edges"
-    })
-  }
-
   test("TokenRollup.mergeToBuckets (Column form) == reduceLeft(_ ++ _) " +
     "over each window's rows, bit-exact") {
     import spark.implicits._
