@@ -29,10 +29,12 @@ import graft.table.TableIO
   *   1m, 1h and 1d states together. No minute is cut; the hours and days
   *   a partition edge cuts are rebuilt on the driver from their children,
   *   collected by the fold's first action.
-  * - Stage, then publish. Every tier's feature write and chunk write and
-  *   the one lineage collect over all tiers are staged concurrently from
-  *   the persisted fold, then published in manifest order: per tier
-  *   features -> lineage -> chunks, tiers finest first.
+  * - Stage, then publish. The fold's states are finalized once, into one
+  *   frame of every pending tier. From it, concurrently, one features
+  *   write and one chunks write stage all tiers (each partitioned by
+  *   tier, see TableIO), and one lineage collect runs over all tiers.
+  *   Then each tier is published in manifest order: per tier features ->
+  *   lineage -> chunks, tiers finest first.
   *   In that order a crash can at worst duplicate lineage on the re-run,
   *   never leave a done day without lineage rows; a failed staging
   *   publishes nothing. The run holds the table's commit lock
@@ -160,6 +162,7 @@ object RollupJob {
       // 2. one fold builds every tier; its edge collect is the first action
       // and fills the cache. The driver makes the cut buckets exact.
       val wins = conf.tiers.map { case (_, win) => TierFold.micros(win) }
+      val tierName = element_at(typedLit(conf.tiers.map(_._1)), col("level") + 1)
       val states = units.reduceOption(_ unionByName _).map { u =>
         val fold = persisted(TierFold(u, wins, pending.map(_.toSet)))
         val edgeRows = fold.where(col("edge") || col("child"))
@@ -168,63 +171,64 @@ object RollupJob {
         val edges = spark.createDataset(TierFold.combine(edgeRows, wins).filter(_.out))(
           Encoders.product[TierFold.Piece]).toDF()
         fold.where(col("out") && !col("edge")).unionByName(edges)
-          .select(col("level"), col("source"),
+          .select(tierName.as("tier"), col("source"),
             TierFold.fromMicros(col("bucket"), tsType).as("bucket"),
             col("P"), col("rows_in"), col("tokens_in"))
       }
 
-      // 3. stage every tier's two writes and the one lineage collect
-      // concurrently over the filled cache, under one job group
+      // 3. finalize once, then stage every pending tier with one features
+      // write, one chunks write and one lineage collect, concurrently over
+      // the filled cache, under one job group
+      val tiers = conf.tiers.map(_._1).zip(pending).collect { case (t, p) if p.nonEmpty => t }
       val group = s"graft-rollup-${conf.jobId}-${java.util.UUID.randomUUID()}"
       val stage = new Concurrently(spark.sparkContext, group)
-      val feats = states.toSeq.flatMap(s => conf.tiers.indices.filter(pending(_).nonEmpty)
-        .map(j => j -> TokenRollup.finalizeFeatures(s.where(col("level") === j))
-          .withColumn("commit_bucket", dayOf(col("bucket")))))
-      val lineage = stage(feats.map { case (j, f) =>
-        f.select(lit(j).as("tier"), col("commit_bucket"), col("tokens_in"),
-          hash(col("source"), col("bucket"),
-            graft.functions.duckRound(col("mean"), 9)).cast("long").as("h"))
-      }.reduceOption(_ union _).toSeq.flatMap(_.groupBy(col("tier"), col("commit_bucket"))
-        .agg(count(lit(1)).as("points"), sum("tokens_in").as("tokens"), sum("h").as("chk"))
-        .collect()
-        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2),
-          if (r.isNullAt(3)) 0L else r.getLong(3), r.getLong(4).toHexString)))
-        .groupMap(_._1)(_._2))
-      val staged = feats.map { case (j, f) =>
-        val tier = conf.tiers(j)._1
-        // One file per write task. The rebalance sizes the files (AQE
-        // coalesces toward advisoryPartitionSizeInBytes): a metadata-sized
-        // tier lands as one file, the 1m tier at scale as size-targeted
-        // files, not a sliver per upstream task. The sorts keep each
-        // source's rows contiguous, so parquet min/max prune on `source`.
-        val featsW = stage(io.stage(tier,
-          f.hint("rebalance", "source").sortWithinPartitions("source", "bucket")))
+      val staged = states.map { s =>
+        val f = TokenRollup.finalizeFeatures(s).withColumn("commit_bucket", dayOf(col("bucket")))
+        val lineage = stage(f.groupBy(col("tier"), col("commit_bucket"))
+          .agg(count(lit(1)).as("points"), sum("tokens_in").as("tokens"),
+            sum(hash(col("source"), col("bucket"),
+              graft.functions.duckRound(col("mean"), 9)).cast("long")).as("chk"))
+          .collect()
+          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
+            if (r.isNullAt(3)) 0L else r.getLong(3), r.getLong(4).toHexString))
+          .toSeq.groupMap(_._1)(_._2))
+        // One file per (write task, tier). The rebalance sizes the files
+        // (AQE coalesces toward advisoryPartitionSizeInBytes): a
+        // metadata-sized run lands as one file per tier, the 1m tier at
+        // scale as size-targeted files, not a sliver per upstream task.
+        // The sorts keep each source's rows contiguous, so parquet min/max
+        // prune on `source`.
+        val featsW = stage(io.stage(tiers,
+          f.hint("rebalance", "source").sortWithinPartitions("tier", "source", "bucket")))
         val ordered = f
           .withColumn("bs", unix_timestamp(col("bucket")))
-          .groupBy(col("source"), col("commit_bucket"))
+          .groupBy(col("tier"), col("source"), col("commit_bucket"))
           .agg(sort_array(collect_list(struct((Seq("bs") ++ conf.chunkFeatures)
             .map(col): _*))).as("pts"))
         val chunks = ordered.select(
-          Seq(col("source"), col("commit_bucket"), size(col("pts")).as("n_points"),
+          Seq(concat(col("tier"), lit("-chunks")).as("tier"), col("source"),
+            col("commit_bucket"), size(col("pts")).as("n_points"),
             dod_encode(col("pts.bs")).as("ts_dod")) ++
             conf.chunkFeatures.map(c =>
               gorilla_encode(col(s"pts.$c")).as(s"${c}_gor")): _*)
-        val chunksW = stage(io.stage(s"$tier-chunks",
-          chunks.sortWithinPartitions("source", "commit_bucket")))
-        j -> (featsW, chunksW)
-      }.toMap
+        val chunksW = stage(io.stage(tiers.map(t => s"$t-chunks"),
+          chunks.sortWithinPartitions("tier", "source", "commit_bucket")))
+        (lineage, featsW, chunksW)
+      }
       stage.awaitAll()
 
       // 4. publish in manifest order: per tier features -> lineage -> chunks
-      val results = conf.tiers.zipWithIndex.map { case ((tier, _), j) =>
-        staged.get(j).fold(TierResult(tier, Nil, 0)) { case (featsW, chunksW) =>
-          val rows = lineage.get().getOrElse(j, Nil)
-          io.publish(featsW.get(), pending(j), conf.jobId)
+      val results = conf.tiers.map(_._1).zip(pending).map {
+        case (tier, days) if days.isEmpty => TierResult(tier, Nil, 0)
+        case (tier, days) =>
+          val (lineage, featsW, chunksW) = staged.get
+          val i = tiers.indexOf(tier)
+          val rows = lineage.get().getOrElse(tier, Nil)
+          io.publish(featsW.get()(i), days, conf.jobId)
           io.appendLineage(conf.jobId, tier, rows)
-          io.publish(chunksW.get(), pending(j), conf.jobId)
+          io.publish(chunksW.get()(i), days, conf.jobId)
           // tier point count = the lineage rows' points summed
-          TierResult(tier, pending(j), rows.map(_._2).sum)
-        }
+          TierResult(tier, days, rows.map(_._2).sum)
       }
 
       // Retention. The cascade above guarantees coarser coverage only for

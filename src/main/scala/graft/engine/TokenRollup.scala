@@ -110,7 +110,8 @@ object TokenRollup {
 
   /** Finalize a bucket-state into the algebraic feature columns —
     * closed forms over the merged sums, matching the reference kernels
-    * (state fields in graft.core.TokenState). */
+    * (state fields in graft.core.TokenState). A `tier` column (RollupJob's
+    * frame of every tier) is kept. */
   def finalizeFeatures(states: DataFrame): DataFrame = {
     val n = col("P.n").cast("double")
     val s1 = col("P.s1"); val s2 = col("P.s2")
@@ -132,7 +133,7 @@ object TokenRollup {
     val sumE = col("P.l1") - col("P.l2")
     val varE = (sumESqAll - sumE * sumE / n) / (n - 1)
     val mobilityD = sqrt(varE) / sqrt(varYPad)
-    states.select(
+    states.select(states.columns.filter(_ == "tier").map(col).toSeq ++ Seq(
       col("source"), col("bucket"), col("P"), col("rows_in"), col("tokens_in"),
       col("P.n").as("n_samples"),
       m.as("mean"),
@@ -146,7 +147,7 @@ object TokenRollup {
       mobility.as("hjorth_mobility"),
       (mobilityD / mobility).as("hjorth_complexity"),
       (col("P.zc") + when(col("P.fSgn") === 0, 1L).otherwise(0L))
-        .cast("double").as("zero_crossings"))
+        .cast("double").as("zero_crossings")): _*)
   }
 
   /** Holistic tier features: per-(source, window) concatenated signal ->

@@ -27,8 +27,20 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *     names a staging dir, and reads resolve strictly through the
   *     manifest, so a staged write is invisible.
   *   - Publish: allocate the snapshot id, atomic-rename the staged dir to
-  *     `snap-<id>`, then append the snapshot line (newline-sealed +
-  *     fsynced — the manifest append IS the commit point).
+  *     `data/<tier>/snap-<id>`, then append the snapshot line
+  *     (newline-sealed + fsynced — the manifest append IS the commit
+  *     point). A staging dir left with no data is removed.
+  * Multi-tier staging: one Spark write of several tiers goes to
+  * `data/<first tier>/_staging/<uuid>/`, partitioned by its `tier`
+  * column, and each `tier=<t>` subdir is tier t's staged write (a tier
+  * with no rows has none and stages as 0 rows). Publishing it renames the
+  * subdir across tier dirs (`data/1m/_staging/…/tier=1d` ->
+  * `data/1d/snap-<id>`), which is atomic because every tier dir lives on
+  * the one file system under `root`. Every `data/<t>` is created before
+  * the write starts, so a tier path that cannot be a dir fails the
+  * staging, never a publish. Each write task writes one file per tier it
+  * holds, so at scale a coarse tier's snapshot can hold as many files as
+  * the 1m tier has write tasks; `compact` bins them.
   * `commit` is stage then publish. A writer that stages several tiers at
   * once (RollupJob) holds the commit lock through `locked` across all of
   * its stages and publishes; its staging threads take neither this
@@ -451,27 +463,64 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     * the commit lock, so a lock holder may stage from pool threads; the
     * caller must hold the lock (`locked`), or the next lock taker
     * reclaims the staging dir. */
-  private[graft] def stage(tier: String, df: DataFrame): Staged = {
+  private[graft] def stage(tier: String, df: DataFrame): Staged =
+    stageWrite(Seq(tier), df, byTier = false).head
+
+  /** `stage` for several tiers in one Spark write: `df`'s `tier` column
+    * names each row's tier (one of `tiers`), the write is partitioned by
+    * it, and each tier's subdir is its `Staged` (see the class header).
+    * The caller sorts each partition by `tier` first, so a write task
+    * holds one tier file open at a time. */
+  private[graft] def stage(tiers: Seq[String], df: DataFrame): Seq[Staged] =
+    stageWrite(tiers, df, byTier = true)
+
+  private def stageWrite(tiers: Seq[String], df: DataFrame, byTier: Boolean): Seq[Staged] = {
     // tier names become filesystem paths — keep them path- and JSON-safe
-    require(tier.matches("[A-Za-z0-9._-]+"),
-      s"tier '$tier' must match [A-Za-z0-9._-]+")
+    tiers.foreach(t => require(t.matches("[A-Za-z0-9._-]+"),
+      s"tier '$t' must match [A-Za-z0-9._-]+"))
     // read() resolves bucket collisions through commit_bucket; enforce the
     // column at write time instead of failing at read time
     require(df.columns.contains("commit_bucket"),
-      s"commit('$tier'): DataFrame must carry a commit_bucket column")
-    val dir = Paths.get(root, "data", tier, TableIO.StagingDir,
+      s"commit('${tiers.mkString(",")}'): DataFrame must carry a commit_bucket column")
+    tiers.foreach(t => Files.createDirectories(Paths.get(root, "data", t)))
+    val dir = Paths.get(root, "data", tiers.head, TableIO.StagingDir,
       java.util.UUID.randomUUID().toString)
     Files.createDirectories(dir.getParent)
-    df.write.mode("overwrite").parquet(dir.toString)
+    val w = df.write.mode("overwrite")
+    (if (byTier) w.partitionBy("tier") else w).parquet(dir.toString)
     // exact row count from the written parquet FOOTERS (driver-side,
     // O(files)) — the former spark.read(...).count() launched a full
     // second Spark scan job per commit just to fill snapshot metadata
-    Staged(tier, dir, countParquetRows(dir))
+    if (!byTier) Seq(Staged(tiers.head, dir, countParquetRows(dir)))
+    else {
+      val written = dir.toFile.list().filter(_.startsWith("tier=")).map(_.stripPrefix("tier="))
+      require(written.forall(tiers.contains),
+        s"staged tiers ${written.mkString(",")} outside ${tiers.mkString(",")}")
+      tiers.map { t =>
+        val sub = dir.resolve(s"tier=$t")
+        Staged(t, sub, if (Files.isDirectory(sub)) countParquetRows(sub) else 0L)
+      }
+    }
+  }
+
+  /** Remove the staging dirs above a published `dir` that hold no more
+    * data: a multi-tier write's root once its last tier is out (only its
+    * _SUCCESS marker is left), then an emptied `_staging`. */
+  private def dropEmptied(dir: Path): Unit = {
+    val parent = dir.getParent
+    if (Files.isDirectory(parent)) {
+      val s = Files.list(parent)
+      val holds = try s.anyMatch(Files.isDirectory(_)) finally s.close()
+      if (!holds) {
+        deleteRec(parent)
+        if (parent.getFileName.toString != TableIO.StagingDir) dropEmptied(parent)
+      }
+    }
   }
 
   /** Make a staged write visible as a snapshot covering `buckets`:
     * allocate its id, rename the staged dir to `snap-<id>`, append the
-    * manifest line (the commit point). */
+    * manifest line (the commit point), drop the emptied staging dirs. */
   private[graft] def publish(staged: Staged, buckets: Seq[Long],
                              jobId: String): Snapshot = synchronized {
     locked {
@@ -480,7 +529,8 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
       // A bucket can legitimately finalize to zero rows (every input row
       // below the state minimum): record it in the manifest (it IS done —
       // resume must not re-run it forever) but keep no data directory
-      // (the write left only a schema-only part file).
+      // (an unpartitioned write left only a schema-only part file, a
+      // multi-tier write no subdir).
       val snapRel = s"data/${staged.tier}/snap-$id"
       val relDir = if (staged.rows == 0L) {
         deleteRec(staged.dir)
@@ -498,6 +548,7 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
       val snap = Snapshot(id, staged.tier, relDir, buckets, staged.rows, jobId,
         System.currentTimeMillis())
       appendDurable(snapshotsFile, snapJson(snap) + "\n")
+      dropEmptied(staged.dir)
       if (st.tailLines + 1 >= checkpointEvery)
         writeCheckpointLocked(st.copy(snaps = st.snaps :+ snap, maxId = id,
           tailLines = st.tailLines + 1))

@@ -200,17 +200,24 @@ class HardeningSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(root, "meta", "snapshots.jsonl")))
   }
 
-  // the last tier's chunk write fails last in the run: its features write,
-  // staged alongside it, is cancelled
+  // the chunks write cannot make the last tier's dir: the features write of
+  // every tier, staged alongside it under data/1m, is cancelled
   test("RollupJob: a failed staging cancels the run's Spark jobs and " +
     "publishes nothing") {
-    failedStaging("1d-chunks", cancelled = Seq("1d"))
+    failedStaging("1d-chunks", cancelled = Seq("1d", "1m"))
   }
 
-  // the first tier's chunk write fails first: its features write and every
-  // coarser tier's action are cancelled or never start
+  // the chunks write fails on its first tier: the features write and every
+  // other action are cancelled or never start
   test("RollupJob: a failed first-tier staging cancels every later action") {
     failedStaging("1m-chunks", cancelled = Seq("1m", "1h", "1h-chunks", "1d", "1d-chunks"))
+  }
+
+  // a coarser features tier that cannot be a dir fails the features write
+  // before it starts, not the 1h publish after 1m was published
+  test("RollupJob: a coarser tier path that cannot be a dir fails the " +
+    "staging, not a publish") {
+    failedStaging("1h", cancelled = Seq("1m", "1m-chunks"))
   }
 
   test("kmeansCentroids: deterministic, k cells, unit-ish centroids") {

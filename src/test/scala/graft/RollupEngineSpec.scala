@@ -201,6 +201,33 @@ class RollupEngineSpec extends AnyFunSuite {
       assert(lineage(a, t).nonEmpty && lineage(a, t) == lineage(b, t), s"$t lineage")
   }
 
+  test("one rollup run: at most 13 Spark jobs, no staging dir left behind") {
+    import java.nio.file.{Files => JFiles, Paths => JPaths}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.graft.SparkTestHooks.drainListeners
+    bulk.count() // fill the input's cache outside the count
+    val root = JFiles.createTempDirectory("graft_census").toString
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      RollupJob.run(spark, bulk, RollupJob.Conf(tableRoot = root, scale = scale))
+      drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    // days collect 2 + fold 5 + lineage collect 2 + features write 2 +
+    // chunks write 2
+    assert(jobs.get <= 13, s"${jobs.get} Spark jobs in one run")
+    assert(new TableIO(root).snapshots().size == 6)
+    val left = JPaths.get(root, "data").toFile.listFiles().toSeq
+      .flatMap(t => t.list().filter(_ == "_staging").map(s => s"${t.getName}/$s"))
+    assert(left.isEmpty, s"staging left behind: $left")
+  }
+
   test("range read infers the tier schema once, not once per snapshot") {
     import spark.implicits._
     import java.nio.file.{Files => JFiles}
