@@ -148,15 +148,8 @@ object RollupJob {
       val units = entryDays.map { case (k, days) =>
         val committed = if (k == 0) None else
           io.readRange(spark, conf.tiers(k - 1)._1, days.min, days.max + 1).map(df =>
-            df.where(col("commit_bucket").isin(days: _*))
-              .select(col("source"),
-                TierFold.toMicros(col("bucket"), df.schema("bucket").dataType).as("ts"),
-                lit("").as("doc_id"), lit(k).as("level"), col("P"),
-                col("rows_in").as("rows"), col("tokens_in").as("tokens")))
-        committed.getOrElse(rowStates.where(col("day").isin(days: _*))
-          .select(col("source"), TierFold.toMicros(col("event_time"), tsType).as("ts"),
-            col("doc_id"), lit(0).as("level"), col("P"), lit(1L).as("rows"),
-            col("row_tokens").as("tokens")))
+            TierFold.stateUnits(df.where(col("commit_bucket").isin(days: _*)), k))
+        committed.getOrElse(TierFold.rowUnits(rowStates.where(col("day").isin(days: _*)), 0))
       }
 
       // 2. one fold builds every tier; its edge collect is the first action

@@ -37,6 +37,10 @@ import graft.core.TokenState
   * would reassociate the summed fields: the result would then depend on
   * where the cuts fall, and a repair from committed 1m states would differ
   * from a clean run in the last bits.
+  *
+  * `TokenRollup.mergeToBuckets`/`cascade` run the fold with one window:
+  * the range key is then the bucket itself, so no bucket is cut and no
+  * piece is an edge.
   */
 private[graft] object TierFold {
 
@@ -72,10 +76,29 @@ private[graft] object TierFold {
     * piece from each partition it spans). */
   @volatile private[graft] var onEdges: (DataFrame, Seq[Piece]) => Unit = (_, _) => ()
 
+  /** Row states (source, event_time, doc_id, P, row_tokens) as units
+    * entering at `level`. A cascaded state carries `row_rows`, the source
+    * rows it already holds; a unit with no `doc_id` orders by "" within
+    * its timestamp. */
+  def rowUnits(rows: DataFrame, level: Int): DataFrame = {
+    def opt(c: String, absent: Column) = if (rows.columns.contains(c)) col(c) else absent
+    rows.select(col("source"),
+      toMicros(col("event_time"), rows.schema("event_time").dataType).as("ts"),
+      opt("doc_id", lit("")).as("doc_id"), lit(level).as("level"), col("P"),
+      opt("row_rows", lit(1L)).as("rows"),
+      coalesce(col("row_tokens"), col("P.n")).as("tokens"))
+  }
+
+  /** Bucket states (source, bucket, P, rows_in, tokens_in) as units
+    * entering at `level`, each at its bucket start. */
+  def stateUnits(states: DataFrame, level: Int): DataFrame =
+    rowUnits(states.select(col("source"), col("bucket").as("event_time"), col("P"),
+      col("tokens_in").as("row_tokens"), col("rows_in").as("row_rows")), level)
+
   /** Fold `units` (source, ts, doc_id, level, P, rows, tokens) into every
     * tier's pieces. `wins` are the tier windows in micros, finest first;
-    * `pending(j)` the days (epoch seconds) to emit at tier j. */
-  def apply(units: DataFrame, wins: Seq[Long], pending: Seq[Set[Long]]): DataFrame = {
+    * `pending(j)` says which days (epoch seconds) to emit at tier j. */
+  def apply(units: DataFrame, wins: Seq[Long], pending: Seq[Long => Boolean]): DataFrame = {
     val w = wins.toArray
     val p = pending.toArray
     units.repartitionByRange(col("source"), col("ts") - pmod(col("ts"), lit(w(0))))
@@ -110,7 +133,7 @@ private[graft] object TierFold {
   }
 
   /** The per-partition fold over sorted entries. */
-  private final class Fold(wins: Array[Long], pending: Array[Set[Long]]) {
+  private final class Fold(wins: Array[Long], pending: Array[Long => Boolean]) {
     private final class Open(val source: String, val start: Long, var p: TokenState,
                              var rows: Long, var tokens: Long, val first: Boolean) {
       val kids = ArrayBuffer.empty[Piece]

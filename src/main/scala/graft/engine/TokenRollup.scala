@@ -1,8 +1,8 @@
 package graft.engine
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 import graft.functions.{token_partials, feature, FeatureParams, TokenPartialsExpr}
 
@@ -11,14 +11,11 @@ import graft.functions.{token_partials, feature, FeatureParams, TokenPartialsExp
   * feature points at cascading retention tiers — the north rule's
   * raw -> 1m -> 1h -> 1d rollup.
   *
-  * Execution shape of the Column form (`mergeToBuckets`/`cascade`, which
-  * the streaming fallback and the tier queries run; `RollupJob` builds all
-  * tiers in one ordered pass instead, see TierFold):
   *  - one narrow projection computes the per-row state (no explode; the
   *    token array never leaves the row),
-  *  - one shuffle per tier level, on (source, bucket) — the window-lag
-  *    "bridge" pass and the groupBy reuse the same clustering, so
-  *    Exchange appears once per tier in the plan,
+  *  - `mergeToBuckets`/`cascade` compose states with TierFold's ordered
+  *    fold (`RollupJob` runs the same fold over every tier at once), so
+  *    each tier is the in-order `TokenState.++` of its units,
   *  - tier T+1 consumes tier T's *states* (17 small doubles per bucket),
   *    not raw data: the 1h and 1d cascades shuffle kilobytes per source
   *    regardless of input size. At 10^12 rows only the 1m level touches
@@ -44,69 +41,27 @@ object TokenRollup {
         col("n_tok").cast("long").as("row_tokens"),
         token_partials(col("tokens"), scale).as("P"))
 
-  /** Compose unit states (ordered by `orderCols` within (source, window))
-    * into one state per (source, bucket). The lag-bridge materializes the
-    * cross-unit boundary terms, after which the reduction is plain sums —
-    * orderless, partial-aggregatable, salt-friendly. The Column form of
-    * graft.core.TokenState's `++` (TokenStateSpec ties the two together). */
+  /** Compose unit states (rows of `rowStates`, or cascaded states with
+    * `row_rows`) in (event_time, doc_id) order into one state per
+    * (source, `win` bucket): TierFold's fold with a single window level,
+    * so the range key is the bucket and no bucket is cut. `orderCols`
+    * must start with event_time; the fold's order refines any such order.
+    * The bucket keeps the input's timestamp type. */
   def mergeToBuckets(units: DataFrame, win: String,
                      orderCols: Seq[String]): DataFrame = {
-    val withW = units.withColumn("w", window(col(orderCols.head), win))
-    val ord = orderCols.map(col)
-    val w = Window.partitionBy(col("source"), col("w")).orderBy(ord: _*)
-    // all three lags in ONE select -> a single Window node in the plan
-    // (chained withColumn would interleave Projects and defeat
-    // CollapseWindow, leaving one Window scan per lag)
-    val lagged = withW.select(col("*"),
-      lag(col("P.l1"), 1).over(w).as("_pl1"),
-      lag(col("P.l2"), 1).over(w).as("_pl2"),
-      lag(col("P.lSgn"), 1).over(w).as("_plSgn"))
-    val pl1 = col("_pl1"); val pl2 = col("_pl2"); val plSgn = col("_plSgn")
-    val d = col("P.f1") - pl1
-    val bridged = lagged.select(col("*"),
-      when(pl1.isNull, lit(0.0)).otherwise(abs(d)).as("bAbsD"),
-      when(pl1.isNull, lit(0.0)).otherwise(d * d).as("bDSq"),
-      when(pl1.isNull, lit(0.0)).otherwise(
-        pow(d - (pl1 - pl2), 2) + pow((col("P.f2") - col("P.f1")) - d, 2)).as("bESq"),
-      when(pl1.isNull, lit(0L)).otherwise(
-        when(col("P.fSgn") === 0 && plSgn =!= 0, lit(1L)).otherwise(lit(0L)) +
-          when(col("P.fSgn") * plSgn < 0, lit(1L)).otherwise(lit(0L))).as("bZc"),
-      struct(ord: _*).as("ordKey"))
-    val agg = bridged.groupBy(col("source"), col("w"))
-      .agg(
-        sum("P.n").as("n"), sum("P.s1").as("s1"), sum("P.s2").as("s2"),
-        sum("P.s3").as("s3"), sum("P.s4").as("s4"),
-        min("P.mn").as("mn"), max("P.mx").as("mx"),
-        (sum("P.sumAbsD") + sum("bAbsD")).as("sumAbsD"),
-        (sum("P.sumDSq") + sum("bDSq")).as("sumDSq"),
-        (sum("P.sumESq") + sum("bESq")).as("sumESq"),
-        min_by(col("P.f1"), col("ordKey")).as("f1"),
-        min_by(col("P.f2"), col("ordKey")).as("f2"),
-        max_by(col("P.l1"), col("ordKey")).as("l1"),
-        max_by(col("P.l2"), col("ordKey")).as("l2"),
-        (sum("P.zc") + sum("bZc")).as("zc"),
-        min_by(col("P.fSgn"), col("ordKey")).as("fSgn"),
-        max_by(col("P.lSgn"), col("ordKey")).as("lSgn"),
-        // cascaded inputs carry how many SOURCE rows each unit already
-        // represents (row_rows) — summing it keeps rows_in meaning "raw
-        // rows in this bucket" at every tier instead of silently becoming
-        // "finer buckets merged" above the finest level
-        (if (units.columns.contains("row_rows")) sum(col("row_rows"))
-         else count(lit(1))).as("rows_in"),
-        sum(coalesce(col("row_tokens"), col("P.n"))).as("tokens_in"))
-      .withColumn("bucket", col("w.start")).drop("w")
-    agg.withColumn("P", struct(StateFields.map(col): _*))
-      .select(col("source"), col("bucket"), col("P"), col("rows_in"),
-        col("tokens_in"))
+    require(orderCols.headOption.contains("event_time"),
+      s"mergeToBuckets orders by event_time first, got $orderCols")
+    fold(TierFold.rowUnits(units, 0), win, units.schema("event_time").dataType)
   }
 
   /** Cascade: tier T bucket-states -> tier T+1 bucket-states. */
   def cascade(bucketStates: DataFrame, win: String): DataFrame =
-    mergeToBuckets(
-      bucketStates.select(col("source"), col("bucket").as("event_time"),
-        col("P"), col("tokens_in").as("row_tokens"),
-        col("rows_in").as("row_rows")),
-      win, Seq("event_time"))
+    fold(TierFold.stateUnits(bucketStates, 0), win, bucketStates.schema("bucket").dataType)
+
+  private def fold(units: DataFrame, win: String, tsType: DataType): DataFrame =
+    TierFold(units, Seq(TierFold.micros(win)), Seq(_ => true)).where(col("out"))
+      .select(col("source"), TierFold.fromMicros(col("bucket"), tsType).as("bucket"),
+        col("P"), col("rows_in"), col("tokens_in"))
 
   /** Finalize a bucket-state into the algebraic feature columns —
     * closed forms over the merged sums, matching the reference kernels

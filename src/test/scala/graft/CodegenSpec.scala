@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,7 @@ import graft.functions.FeatureParams
   * non-finite kernel results). Equality is asserted by running the same
   * plans with whole-stage codegen + codegen'd projections ON vs forced
   * interpreted (factoryMode=NO_CODEGEN). */
-class CodegenSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CodegenSpec extends AnyFunSuite with SparkSpec {
   private def bothModes(df: => org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) = {
     def rows(): Seq[String] = df.collect().map(_.toString).toSeq.sorted
     spark.conf.set("spark.sql.codegen.wholeStage", "true")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,14 +8,7 @@ import graft.functions.FeatureParams
 import graft.gen.TokenGen
 
 /** FeatureEngine facade + streaming tier + SQL registration. */
-class EngineApiSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class EngineApiSpec extends AnyFunSuite with SparkSpec {
   val scale: Double = 1.0 / (1 << 24)
 
   test("FeatureEngine.extract: reference-named wide output + param routing " +

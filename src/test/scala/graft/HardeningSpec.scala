@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,7 @@ import graft.table.TableIO
 
 /** Round-2 hardening: signal caps, manifest robustness, resume gap,
   * deterministic IVF, SQL-replicable fingerprints, multi-band LSH. */
-class HardeningSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class HardeningSpec extends AnyFunSuite with SparkSpec {
   val sfDir = "/root/testdata/sf0.001"
 
   test("eventSignals maxSeqLen cap: truncates to first K by (ts, event_id), flags") {

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.MultimodalOps
 
-class MultimodalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MultimodalSpec extends AnyFunSuite with SparkSpec {
   test("media pipeline: schema, batch extract, determinism, frame sampling") {
     spark.sparkContext.setLogLevel("ERROR")
     val corpus = MultimodalOps.synthCorpus(spark, 200).persist()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import graft.operators.PipelineOps
   * decontamination collision contract + its broadcast plan shape, and
   * content-keyed split invariants.
   */
-class PipelineOpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PipelineOpsSpec extends AnyFunSuite with SparkSpec {
   private def docs(rows: Seq[(Long, String, String)]) = {
     import spark.implicits._
     rows.toDF("doc_id", "text", "source")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression gates for the scale-critical operators: the
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * shuffling every ANN candidate, vectors riding the near-dup pair
   * exchange, unbounded collect_list state). These tests pin the fixed
   * shapes so a refactor cannot silently reintroduce them. */
-class PlanAuditSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PlanAuditSpec extends AnyFunSuite with SparkSpec {
   val sfDir = "/root/testdata/sf0.001"
 
   private def plan(q: String): String = {
@@ -86,14 +78,16 @@ class PlanAuditSpec extends AnyFunSuite {
       s"gap-fill plan hash-shuffled $hashExchanges times:\n$p")
   }
 
-  test("tier rollup: single exchange shared by bridge window and groupBy") {
-    val p = plan("q_tier_1h")
-    // one shuffle for the (source, window) clustering; AQE may add a
-    // final output exchange for the orderBy — count the hash-partition
-    // exchanges feeding the aggregation instead of total occurrences
-    val hashExchanges = "hashpartitioning\\(source".r
-      .findAllMatchIn(p.toLowerCase).size
-    assert(hashExchanges <= 2, s"tier plan shuffled $hashExchanges times:\n$p")
+  test("tier merge: mergeToBuckets shuffles once, by range on source, no Window") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val states = graft.engine.TokenRollup.rowStates(
+      graft.gen.TokenGen.bulk(spark, 200, nSources = 4, minLen = 16, maxLen = 64), 1.0)
+    val p = graft.engine.TokenRollup.mergeToBuckets(states, "1 minute",
+      Seq("event_time", "doc_id")).queryExecution.executedPlan.toString
+    assert("Exchange ".r.findAllMatchIn(p).size == 1 &&
+      p.contains("Exchange rangepartitioning(source"),
+      s"the merge must shuffle once, by range on source:\n$p")
+    assert(!p.contains("Window"), s"no Window in the merge:\n$p")
   }
 
   test("tier fold: RollupJob's states come from one range exchange, no Window") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,14 +14,7 @@ import graft.table.TableIO
   * chunk round-trip, token-array ingest invariant, checkpoint-resume
   * idempotence.
   */
-class RollupEngineSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RollupEngineSpec extends AnyFunSuite with SparkSpec {
   lazy val bulk = {
     spark.sparkContext.setLogLevel("ERROR")
     TokenGen.bulk(spark, 600, nSources = 4, minLen = 64, maxLen = 512).persist()

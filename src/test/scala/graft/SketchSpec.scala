@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +11,7 @@ import graft.functions.{hll_distinct, mg_topk}
   * across partitionings (the property that makes them safe under AQE
   * re-plans and speculative retries).
   */
-class SketchSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SketchSpec extends AnyFunSuite with SparkSpec {
   test("hll sparse regime is exact and partitioning-invariant") {
     import spark.implicits._
     val n = 3000

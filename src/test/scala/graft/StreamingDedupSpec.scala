@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming exact dedup: cross-trigger statefulness and batch-split
   * invariance (the properties the driver gate relies on). */
-class StreamingDedupSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class StreamingDedupSpec extends AnyFunSuite with SparkSpec {
   private def del(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(del)
     f.delete()

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,18 +15,10 @@ import graft.table.TableIO
 /** RollupJob's one-pass fold across partition edges. Each spec runs with
   * many shuffle partitions and AQE coalescing off: at the default settings
   * AQE coalesces spec-sized data into one partition and no edge is cut. */
-class TierFoldSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TierFoldSpec extends AnyFunSuite with SparkSpec {
   private val Tiers = Seq("1m", "1h", "1d")
   private val Wins = Seq("1 minute", "1 hour", "1 day")
   private val T0 = 1704067200L // 2024-01-01T00:00:00Z
-  private val Summed = Set("s1", "s2", "s3", "s4", "sumAbsD", "sumDSq", "sumESq")
 
   import TierFoldSpec.{Key, St}
 
@@ -94,12 +86,19 @@ class TierFoldSpec extends AnyFunSuite {
     Tiers.map(t => states(io.read(spark, t).get))
   }
 
-  /** mergeToBuckets 1m, then cascade 1h and 1d: the Column form. */
-  private def columnStates(tokens: DataFrame, scale: Double): Seq[Map[Key, St]] = {
-    val m1 = TokenRollup.mergeToBuckets(TokenRollup.rowStates(tokens, scale), Wins(0),
-      Seq("event_time", "doc_id"))
-    val h1 = TokenRollup.cascade(m1, Wins(1))
-    Seq(m1, h1, TokenRollup.cascade(h1, Wins(2))).map(states)
+  /** The 1m states on the driver: each (source, minute)'s row states,
+    * collected, sorted by (ts, doc_id) and joined with `reduceLeft(_ ++ _)`. */
+  private def driverMinutes(tokens: DataFrame, scale: Double): Map[Key, St] = {
+    import spark.implicits._
+    val w = TierFold.micros(Wins(0))
+    TokenRollup.rowStates(tokens, scale)
+      .select(col("source"), unix_micros(col("event_time")), col("doc_id"), col("P"),
+        col("row_tokens")).as[(String, Long, String, TokenState, Long)].collect().toSeq
+      .groupBy { case (s, ts, _, _, _) => (s, Math.floorDiv(ts, w) * w) }
+      .map { case (k, rows) =>
+        val sorted = rows.sortBy { case (_, ts, d, _, _) => (ts, d) }
+        k -> St(sorted.map(_._4).reduceLeft(_ ++ _), rows.size, rows.map(_._5).sum)
+      }
   }
 
   private def fields(s: TokenState): Seq[(String, Any)] =
@@ -110,24 +109,19 @@ class TierFoldSpec extends AnyFunSuite {
     case v => v
   }
 
-  /** Fields of `a` that differ from `b`: in any bit, or, with `mag`, the
-    * summed fields by more than 1e-12 of max(|b|, mag) (TokenStateSpec's
-    * bound for full-range tokens). */
-  private def diff(a: St, b: St, mag: Option[String => Double] = None): Seq[String] =
+  /** Fields of `a` that differ from `b` in any bit. */
+  private def diff(a: St, b: St): Seq[String] =
     fields(a.P).zip(fields(b.P)).collect {
-      case ((f, x: Double), (_, y: Double)) if mag.isDefined && Summed(f)
-        && math.abs(x - y) > 1e-12 * math.max(math.abs(y), mag.get(f)) => f
-      case ((f, x), (_, y)) if !(mag.isDefined && Summed(f)) && bits(x) != bits(y) => f
+      case ((f, x), (_, y)) if bits(x) != bits(y) => f
     } ++ Seq("rows_in" -> (a.rows != b.rows), "tokens_in" -> (a.tokens != b.tokens))
       .collect { case (f, true) => f }
 
   private def assertSame(got: Seq[Map[Key, St]], want: Seq[Map[Key, St]],
-                         mag: Option[(Int, Key) => String => Double] = None,
                          tiers: Seq[String] = Tiers): Unit =
     for (j <- tiers.indices) {
       assert(got(j).keySet == want(j).keySet && got(j).nonEmpty, s"${tiers(j)} keys")
       val bad = want(j).toSeq.flatMap { case (k, w) =>
-        val d = diff(got(j)(k), w, mag.map(m => m(j, k)))
+        val d = diff(got(j)(k), w)
         if (d.isEmpty) None else Some(k -> d)
       }
       assert(bad.isEmpty, s"${tiers(j)}: ${bad.size} buckets differ, e.g. ${bad.take(3)}")
@@ -144,43 +138,22 @@ class TierFoldSpec extends AnyFunSuite {
       assertSame(Seq(tiers(j)), Seq(folded), tiers = Seq(s"${Tiers(j)} as a left fold"))
     }
 
-  for ((scale, label) <- Seq(1.0 -> "1.0", 1.0 / (1 << 24) -> "2^-24")) {
-    test(s"fold == Column form across partition edges, bit for bit for |t| < 2^10 " +
-      s"(scale $label)") {
+  for ((tok, scale, label) <- Seq((small, 1.0, "|t| < 2^10 (scale 1.0)"),
+    (small, 1.0 / (1 << 24), "|t| < 2^10 (scale 2^-24)"),
+    (full, 1.0 / (1 << 24), "full-range int32 (scale 2^-24)"))) {
+    test(s"fold == driver-side left fold across partition edges, bit for bit " +
+      s"for $label") {
       spark.sparkContext.setLogLevel("ERROR")
-      val tokens = frame(corpus(Seq(0, 1, 17, 30, 59), 12, small))
+      val tokens = frame(corpus(Seq(0, 1, 17, 30, 59), 12, tok))
       val root = Files.createTempDirectory("graft_fold").toString
       val edges = withPartitions(16)(runJob(tokens,
         RollupJob.Conf(tableRoot = root, scale = scale)))
       val cut = cuts(edges).map(_._1)
       assert(cut == Set(1, 2), s"cuts at levels $cut")
       val got = tableStates(root)
-      assertSame(got, columnStates(tokens, scale))
+      assertSame(got.take(1), Seq(driverMinutes(tokens, scale)), Tiers.take(1))
       assertLeftFolds(got)
     }
-  }
-
-  test("fold == Column form across partition edges, full-range int32 at 2^-24: " +
-    "order-free fields exact, summed fields within TokenStateSpec's bound, " +
-    "coarser tiers the exact left fold of the finer") {
-    spark.sparkContext.setLogLevel("ERROR")
-    val scale = 1.0 / (1 << 24)
-    val docs = corpus(Seq(0, 1, 17, 30, 59), 12, full)
-    val tokens = frame(docs)
-    val root = Files.createTempDirectory("graft_fold_full").toString
-    val edges = withPartitions(16)(runJob(tokens,
-      RollupJob.Conf(tableRoot = root, scale = scale)))
-    assert(cuts(edges).map(_._1) == Set(1, 2))
-    // per (tier, bucket) sums of |x|^p, the bound's scale for s1..s4
-    val mags = Wins.map(TierFold.micros).map { w =>
-      docs.groupBy(d => (d.source, Math.floorDiv(d.event_time.getTime * 1000L, w) * w))
-        .map { case (k, ds) => k -> Seq(1, 2, 3, 4).map(p => s"s$p" ->
-          ds.flatMap(_.tokens).map(t => math.pow(math.abs(t * scale), p)).sum).toMap }
-    }
-    val got = tableStates(root)
-    assertSame(got, columnStates(tokens, scale),
-      Some((j: Int, k: Key) => (f: String) => mags(j)(k).getOrElse(f, 0.0)))
-    assertLeftFolds(got)
   }
 
   test("one run, mixed repair levels: a day pending at every tier and a day " +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -16,17 +15,10 @@ import graft.functions.TokenPartialsExpr
 
 /** Laws of the token-state algebra: the per-row kernel composes under `++`
   * exactly as the state of the concatenated signal, and the batch tier's
-  * Column form of the ordered merge equals the Scala one. "Exact" is the
-  * quantized-sample convention (FIXTURES.md §2): integer tokens |t| < 2^10
-  * make every partial sum exact in any order, so states match bit for bit. */
-class TokenStateSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+  * ordered merge is the Scala left fold. "Exact" is the quantized-sample
+  * convention (FIXTURES.md §2): integer tokens |t| < 2^10 make every
+  * partial sum exact in any order, so states match bit for bit. */
+class TokenStateSpec extends AnyFunSuite with SparkSpec {
   private val fromRow = ExpressionEncoder[TokenState]().resolveAndBind()
     .createDeserializer()
 
@@ -105,15 +97,17 @@ class TokenStateSpec extends AnyFunSuite {
     })
   }
 
-  test("TokenRollup.mergeToBuckets (Column form) == reduceLeft(_ ++ _) " +
-    "over each window's rows, bit-exact") {
+  test("TokenRollup.mergeToBuckets == reduceLeft(_ ++ _) over each window's " +
+    "rows, bit-exact, for |t| < 2^10 and for full-range int32") {
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")
     val scale = 1.0 / (1 << 24)
     val k = kernel(scale) _
-    // window w holds its signal's parts as rows one second apart, in order
-    val windows = Gen.listOfN(400, parts(small))
-      .pureApply(Gen.Parameters.default, Seed(7L)).zipWithIndex
+    // window w holds its signal's parts as rows one second apart, in order;
+    // the first 400 windows small tokens, the next 400 full-range ones
+    val windows = Seq(small, Gen.choose(Int.MinValue, Int.MaxValue))
+      .flatMap(tok => Gen.listOfN(400, parts(tok)).pureApply(Gen.Parameters.default, Seed(7L)))
+      .zipWithIndex
     val rows = for ((ps, w) <- windows; (p, i) <- ps.zipWithIndex)
       yield (s"s${w % 3}", new java.sql.Timestamp(w * 60000L + i * 1000L),
         f"d$w%04d_$i%02d", p, p.length)

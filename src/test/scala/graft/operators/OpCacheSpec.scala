@@ -1,16 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class OpCacheSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+import graft.SparkSpec
 
+class OpCacheSpec extends AnyFunSuite with SparkSpec {
   private def frame(tag: Long) = spark.range(0, 1000).withColumn("tag", lit(tag))
   private def cached(df: DataFrame) =
     spark.sharedState.cacheManager.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
