@@ -83,11 +83,24 @@ object SparkEntry {
       .select(col("user_id"), duckRound(f(name)(col("signal")), digits).as(outCol))
       .orderBy("user_id")
 
-  // gate queries stage scratch tables under /tmp — one shared recursive
-  // delete instead of a copy per query
   private def del(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(del)
     f.delete()
+  }
+
+  /** The gate queries' scratch root: one temp dir per JVM, removed at
+    * exit, so two runs on one host never delete each other's tables. */
+  private[graft] lazy val gateRoot: java.io.File = {
+    val r = java.nio.file.Files.createTempDirectory("graft_gates").toFile
+    sys.addShutdownHook(del(r))
+    r
+  }
+
+  /** A gate's table dir under [[gateRoot]], its old copy deleted. */
+  private def gateDir(name: String): String = {
+    val d = new java.io.File(gateRoot, name)
+    del(d)
+    d.getPath
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -201,8 +214,7 @@ object SparkEntry {
     // streaming face of the mergeable state is oracle-gated, not just
     // ScalaTest-gated.
     "q_streaming_equivalence" -> ((s, dir) => {
-      val src = "/tmp/graft_stream_gate"
-      del(new java.io.File(src))
+      val src = gateDir("graft_stream_gate")
       val ev = centsEvents(s, dir)
       ev.groupBy(col("event_type").as("source"),
         window(col("ts"), "10 minutes")("start").as("event_time"))
@@ -338,8 +350,7 @@ object SparkEntry {
     // the sparse-exact regime, so the oracle is a per-(type, day)
     // count(DISTINCT) recompute
     "q_streaming_distinct" -> ((s, dir) => {
-      val src = "/tmp/graft_stream_hll_gate"
-      del(new java.io.File(src))
+      val src = gateDir("graft_stream_hll_gate")
       // stage into a directory (the file stream source rejects bare
       // files); window() requires TIMESTAMP — the NTZ cast is the
       // identity instant under the UTC session. 8 staged files +
@@ -377,8 +388,7 @@ object SparkEntry {
     // with synthesized duplicates) — the final view must hash-match the
     // one-shot batch oracle whatever the batch split was
     "q_dedup_streaming" -> ((s, dir) => {
-      val src = "/tmp/graft_stream_dedup_gate"
-      del(new java.io.File(src))
+      val src = gateDir("graft_stream_dedup_gate")
       val base = TextOps.docs(s, dir).select(col("doc_id"), col("text"))
       val dups = base.where(pmod(col("doc_id"), lit(7)) === 0)
         .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
@@ -509,8 +519,7 @@ object SparkEntry {
     // 1h aggregate the oracle computes. Exercises TableIO commit/resume +
     // the mergeable-state cascade end to end.
     "q_resume_equivalence" -> ((s, dir) => {
-      val root = "/tmp/graft_resume_gate"
-      del(new java.io.File(root))
+      val root = gateDir("graft_resume_gate")
       // stage the token table ONCE for the multi-step backfill: both jobs
       // (and their day-list actions) re-evaluate `tok`, and centsTokens is
       // a full groupBy+collect shuffle per evaluation — the same persist a
@@ -542,8 +551,7 @@ object SparkEntry {
     // recomputes the surviving bucket set (day >= max event day) from raw
     // events.
     "q_retention" -> ((s, dir) => {
-      val root = "/tmp/graft_retention_gate"
-      del(new java.io.File(root))
+      val root = gateDir("graft_retention_gate")
       val tok = centsTokens(s, dir) // staged once across both runs
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val conf = graft.engine.RollupJob.Conf(tableRoot = root, scale = 1.0,
@@ -568,8 +576,7 @@ object SparkEntry {
     // listed; RollupEngineSpec pins that via inputFiles). The oracle
     // recomputes the 1h aggregate restricted to the same day range.
     "q_table_range_read" -> ((s, dir) => {
-      val root = "/tmp/graft_range_gate"
-      del(new java.io.File(root))
+      val root = gateDir("graft_range_gate")
       val tok = centsTokens(s, dir) // staged once across all three steps
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val conf = graft.engine.RollupJob.Conf(tableRoot = root, scale = 1.0,

@@ -43,8 +43,6 @@ final class BitWriter(initialBytes: Int = 64) {
     bitPos += 1
   }
 
-  def lengthBits: Long = bitPos
-
   def toBytes: Array[Byte] = java.util.Arrays.copyOf(buf, ((bitPos + 7) / 8).toInt)
 }
 

@@ -65,7 +65,8 @@ object RollupJob {
   // which follows spark.sql.session.timeZone: a non-UTC caller would get
   // day buckets misaligned with window('1 day')'s UTC-epoch alignment,
   // committing day D's data under bucket D-1 and breaking resume. run()
-  // is the public API; only main() and the tests pin the session to UTC.
+  // is the public API; only graft.LocalSpark (main() and the tests) pins
+  // the session to UTC.
   private def dayOf(c: org.apache.spark.sql.Column) =
     floor(unix_timestamp(c) / 86400L).cast("long") * 86400L
 
@@ -254,15 +255,7 @@ object RollupJob {
   def main(args: Array[String]): Unit = {
     val inPath = args.lift(0).getOrElse("/tmp/graft_tokens")
     val root = args.lift(1).getOrElse("/tmp/graft_table")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
     val tokens = spark.read.parquet(inPath)
     val res = run(spark, tokens, Conf(tableRoot = root))
     res.foreach(r => println(s"[rollup] tier=${r.tier} newDays=${r.newDays.size} points=${r.points}"))

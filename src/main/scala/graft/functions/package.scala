@@ -41,16 +41,6 @@ package object functions {
               params: FeatureParams = FeatureParams()): Column =
     col(TokenFeature(expr(tokens), name, params))
 
-  // convenience wrappers for the headline features
-  def f_mean(c: Column, p: FeatureParams = FeatureParams()): Column = feature("mean", c, p)
-  def f_variance(c: Column, p: FeatureParams = FeatureParams()): Column = feature("variance", c, p)
-  def f_std(c: Column, p: FeatureParams = FeatureParams()): Column = feature("std", c, p)
-  def f_line_length(c: Column, p: FeatureParams = FeatureParams()): Column = feature("line_length", c, p)
-  def f_hjorth_mobility(c: Column, p: FeatureParams = FeatureParams()): Column = feature("hjorth_mobility", c, p)
-  def f_hjorth_complexity(c: Column, p: FeatureParams = FeatureParams()): Column = feature("hjorth_complexity", c, p)
-  def f_higuchi_fd(c: Column, p: FeatureParams = FeatureParams()): Column = feature("higuchi_fd", c, p)
-  def f_spect_entropy(c: Column, p: FeatureParams = FeatureParams()): Column = feature("spect_entropy", c, p)
-
   /** Bounded sorted collect (first maxLen struct values ascending) — the
     * memory-capped replacement for slice(sort_array(collect_list(...))):
     * the heap never exceeds maxLen at ANY stage, map-side partials

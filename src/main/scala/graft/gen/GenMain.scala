@@ -1,7 +1,5 @@
 package graft.gen
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes the deterministic synthetic token table to parquet:
   * `runMain graft.gen.GenMain <out> <nDocs> [nSources minLen maxLen]`.
   * Also appends the parity fixtures so every table carries the reference
@@ -14,14 +12,7 @@ object GenMain {
     val nSources = args.lift(2).map(_.toInt).getOrElse(16)
     val minLen = args.lift(3).map(_.toInt).getOrElse(64)
     val maxLen = args.lift(4).map(_.toInt).getOrElse(4096)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
     val df = TokenGen.bulk(spark, nDocs, nSources, minLen, maxLen)
       .unionByName(TokenGen.fixtures(spark))
     df.write.mode("overwrite").partitionBy("source").parquet(out)

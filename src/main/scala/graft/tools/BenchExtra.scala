@@ -1,16 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Supplementary per-query timing harness for the optimization round —
   * graft.Bench is frozen for measurement, so isolation runs live here.
   * Mirrors Bench's session config and forced-evaluation protocol exactly
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions = max(cpus, 8), AQE on,
-  * one xxhash64-checksum aggregation per timing) so numbers are
-  * comparable with BENCH_r*.json entries. Usage:
+  * (local[cpus], shuffle.partitions = max(cpus, 8), AQE on, one
+  * xxhash64-checksum aggregation per timing) so numbers are comparable
+  * with BENCH_r*.json entries; cpus is SPARK_GRAFT_CPUS, else the host's
+  * processor count (graft.LocalSpark). Usage:
   *
-  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     sbt "runMain graft.tools.BenchExtra [reps] [query ...]"
   *
   * No query list = the full suite. Prints per-query all samples + min; a
@@ -38,19 +39,12 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.LocalSpark.defaultCpus
     val reps = args.headOption.flatMap(_.toIntOption).getOrElse(3)
     val qnames =
       (if (args.headOption.flatMap(_.toIntOption).isDefined) args.tail
        else args).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.max(cpus, 8))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark(cpus, partitions = Some(math.max(cpus, 8)))
     val named = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => qnames.isEmpty || qnames.contains(n) }
     // untimed warm-up absorbs JIT + plan-infra cold start (same as Bench)

@@ -2,10 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Write a deterministic TokenGen.bulk table: `GenTable <out> <nDocs>`.
-  * Used for the data-size linearity soak (BENCH.md). graft.Bench phase 0
-  * calls [[GenTable.write]] too, so the soak tables and the bench scaling
-  * table share one generator + layout by construction. */
+/** The scaling-table writer of graft.Bench phase 0. `graft.gen.GenMain
+  * <out> <nDocs>` writes the same TokenGen.bulk recipe from the command
+  * line, with the parity fixtures appended. */
 object GenTable {
 
   /** The scaling-table recipe: zipf lengths 64..4096, 16 sources, seed 42,
@@ -13,19 +12,4 @@ object GenTable {
   def write(spark: SparkSession, out: String, docs: Int): Unit =
     graft.gen.TokenGen.bulk(spark, docs, 16, 64, 4096)
       .write.mode("overwrite").partitionBy("source").parquet(out)
-
-  def main(args: Array[String]): Unit = {
-    val out = args(0)
-    val docs = args(1).toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    write(spark, out, docs)
-    println(s"[gentable] wrote $docs docs to $out")
-    spark.stop()
-  }
 }

@@ -55,21 +55,14 @@ object RollupBench {
   def main(args: Array[String]): Unit = {
     val tokensPath = args(0)
     val cpus = args(1).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.max(cpus, 8))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // split sizing: the synthetic table is many small files with very
-      // heavy per-row compute; the default 128MB bins + 4MB open-cost
-      // pack them into ~16 splits and cap parallelism below the core
-      // count. Size splits for CPU cost, not byte count.
-      .config("spark.sql.files.maxPartitionBytes", (2 * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (32 * 1024).toString)
-      .config("spark.sql.parquet.columnarReaderBatchSize", "512")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // split sizing: the synthetic table is many small files with very
+    // heavy per-row compute; the default 128MB bins + 4MB open-cost
+    // pack them into ~16 splits and cap parallelism below the core
+    // count. Size splits for CPU cost, not byte count.
+    val spark = graft.LocalSpark(cpus, partitions = Some(math.max(cpus, 8)), conf = Map(
+      "spark.sql.files.maxPartitionBytes" -> (2 * 1024 * 1024).toString,
+      "spark.sql.files.openCostInBytes" -> (32 * 1024).toString,
+      "spark.sql.parquet.columnarReaderBatchSize" -> "512"))
     def procCpuSec: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .asInstanceOf[com.sun.management.OperatingSystemMXBean]

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.core._
 import graft.gen.TokenGen
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev smoke driver: exercises the library end-to-end through its public
@@ -23,12 +22,7 @@ object Smoke {
     println(s"probe len2 lineLength=${Features.lineLength(Array(1.0, 4.0))}")
     println(s"probe quantile single=${Features.quantiles(Array(5.0), Array(0.5)).mkString(",")}")
 
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark(cpus = 4)
     try {
       val fx = TokenGen.fixtures(spark)
       fx.select("doc_id", "n_tok", "source", "event_time").show(5, truncate = false)

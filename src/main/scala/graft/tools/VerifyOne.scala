@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Selective Verify: dump only the named queries (plus their oracle SQL)
   * to an outDir in the same layout the driver's compare expects —
   * `runMain graft.tools.VerifyOne <sfDir> <outDir> q_a q_b ...`, then
@@ -11,14 +9,7 @@ object VerifyOne {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       graft.SparkEntry.queries(name)(spark, sfDir)

@@ -399,4 +399,12 @@ class HardeningSpec extends AnyFunSuite with SparkSpec {
     assert(kept.forall(_ <= 200 + 96), s"state not bounded: ${kept.max}")
     bulk.unpersist()
   }
+
+  test("gate tables stage under the per-JVM scratch root, not a fixed /tmp path") {
+    val files = SparkEntry.queries("q_table_range_read")(spark, sfDir).inputFiles
+    val dir = new java.io.File(SparkEntry.gateRoot, "graft_range_gate").toURI.getPath
+    assert(files.nonEmpty)
+    assert(files.forall(f => new java.net.URI(f).getPath.startsWith(dir)), files.toSeq)
+    assert(!files.exists(_.contains("/tmp/graft_range_gate")), files.toSeq)
+  }
 }
