@@ -3,8 +3,13 @@ package graft.engine
 import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService,
   Executors, Future => JFuture, TimeUnit}
 
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.functions.{dod_encode, gorilla_encode}
@@ -32,9 +37,10 @@ import graft.table.TableIO
   * - Stage, then publish. The fold's states are finalized once, into one
   *   frame of every pending tier. From it, concurrently, one features
   *   write and one chunks write stage all tiers (each partitioned by
-  *   tier, see TableIO), and one lineage collect runs over all tiers.
-  *   Then each tier is published in manifest order: per tier features ->
-  *   lineage -> chunks, tiers finest first.
+  *   tier, see TableIO). The lineage of every tier is an `Observation` on
+  *   the features write, so it costs no job of its own. Then each tier is
+  *   published in manifest order: per tier features -> lineage -> chunks,
+  *   tiers finest first.
   *   In that order a crash can at worst duplicate lineage on the re-run,
   *   never leave a done day without lineage rows; a failed staging
   *   publishes nothing. The run holds the table's commit lock
@@ -60,6 +66,26 @@ object RollupJob {
       manifestCheckpointEvery: Int = 16)
 
   final case class TierResult(tier: String, newDays: Seq[Long], points: Long)
+
+  /** The lineage of every (tier, day) in one pass: a keyed sum of points
+    * out, tokens in and the order-free checksum sum(hash(source, bucket,
+    * duckRound(mean, 9))). An `Observation` does not group, so the key
+    * lives in the buffer; it holds one entry per (tier, day) of the run. */
+  private object LineageSums extends Aggregator[(String, Long, Long, Long),
+      Map[(String, Long), (Long, Long, Long)], Map[(String, Long), (Long, Long, Long)]] {
+    private type Sums = Map[(String, Long), (Long, Long, Long)]
+    val inputEncoder: Encoder[(String, Long, Long, Long)] = Encoders.tuple(
+      Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
+    def zero: Sums = Map.empty
+    def reduce(b: Sums, in: (String, Long, Long, Long)): Sums =
+      add(b, (in._1, in._2), (1L, in._3, in._4))
+    def merge(a: Sums, b: Sums): Sums = b.foldLeft(a) { case (m, (k, v)) => add(m, k, v) }
+    private def add(m: Sums, k: (String, Long), v: (Long, Long, Long)): Sums =
+      m.updated(k, m.get(k).fold(v)(o => (o._1 + v._1, o._2 + v._2, o._3 + v._3)))
+    def finish(b: Sums): Sums = b
+    def bufferEncoder: Encoder[Sums] = ExpressionEncoder[Sums]()
+    def outputEncoder: Encoder[Sums] = ExpressionEncoder[Sums]()
+  }
 
   // UTC-day truncation from the epoch directly — NOT date_trunc('day'),
   // which follows spark.sql.session.timeZone: a non-UTC caller would get
@@ -171,29 +197,28 @@ object RollupJob {
       }
 
       // 3. finalize once, then stage every pending tier with one features
-      // write, one chunks write and one lineage collect, concurrently over
-      // the filled cache, under one job group
+      // write (observing the lineage) and one chunks write, concurrently
+      // over the filled cache, under one job group
       val tiers = conf.tiers.map(_._1).zip(pending).collect { case (t, p) if p.nonEmpty => t }
       val group = s"graft-rollup-${conf.jobId}-${java.util.UUID.randomUUID()}"
       val stage = new Concurrently(spark.sparkContext, group)
       val staged = states.map { s =>
         val f = TokenRollup.finalizeFeatures(s).withColumn("commit_bucket", dayOf(col("bucket")))
-        val lineage = stage(f.groupBy(col("tier"), col("commit_bucket"))
-          .agg(count(lit(1)).as("points"), sum("tokens_in").as("tokens"),
-            sum(hash(col("source"), col("bucket"),
-              graft.functions.duckRound(col("mean"), 9)).cast("long")).as("chk"))
-          .collect()
-          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
-            if (r.isNullAt(3)) 0L else r.getLong(3), r.getLong(4).toHexString))
-          .toSeq.groupMap(_._1)(_._2))
         // One file per (write task, tier). The rebalance sizes the files
         // (AQE coalesces toward advisoryPartitionSizeInBytes): a
         // metadata-sized run lands as one file per tier, the 1m tier at
         // scale as size-targeted files, not a sliver per upstream task.
         // The sorts keep each source's rows contiguous, so parquet min/max
-        // prune on `source`.
+        // prune on `source`. The lineage is observed on the frame the write
+        // consumes, so it is summed in the write's result stage, once per
+        // task, with no job of its own.
+        val lineage = Observation()
         val featsW = stage(io.stage(tiers,
-          f.hint("rebalance", "source").sortWithinPartitions("tier", "source", "bucket")))
+          f.hint("rebalance", "source").sortWithinPartitions("tier", "source", "bucket")
+            .observe(lineage, udaf(LineageSums, LineageSums.inputEncoder)(col("tier"),
+              col("commit_bucket"), coalesce(col("tokens_in"), lit(0L)),
+              hash(col("source"), col("bucket"),
+                graft.functions.duckRound(col("mean"), 9)).cast("long")).as("lineage"))))
         val ordered = f
           .withColumn("bs", unix_timestamp(col("bucket")))
           .groupBy(col("tier"), col("source"), col("commit_bucket"))
@@ -210,14 +235,25 @@ object RollupJob {
         (lineage, featsW, chunksW)
       }
       stage.awaitAll()
+      // tier -> (day, points, tokens, checksum), days ascending. The
+      // observed row reaches the Observation through the listener bus after
+      // the write returns; the bound turns a lost event into a failed run
+      // (nothing is published yet) instead of a hang.
+      val lineage = staged.fold(Map.empty[String, Seq[(Long, Long, Long, String)]]) { s =>
+        Await.result(s._1.future, Duration(60, TimeUnit.SECONDS))
+          .getMap[Row, Row](0).toSeq
+          .map { case (k, v) =>
+            k.getString(0) -> (k.getLong(1), v.getLong(0), v.getLong(1), v.getLong(2).toHexString)
+          }.sortBy(_._2._1).groupMap(_._1)(_._2)
+      }
 
       // 4. publish in manifest order: per tier features -> lineage -> chunks
       val results = conf.tiers.map(_._1).zip(pending).map {
         case (tier, days) if days.isEmpty => TierResult(tier, Nil, 0)
         case (tier, days) =>
-          val (lineage, featsW, chunksW) = staged.get
+          val (_, featsW, chunksW) = staged.get
           val i = tiers.indexOf(tier)
-          val rows = lineage.get().getOrElse(tier, Nil)
+          val rows = lineage.getOrElse(tier, Nil)
           io.publish(featsW.get()(i), days, conf.jobId)
           io.appendLineage(conf.jobId, tier, rows)
           io.publish(chunksW.get()(i), days, conf.jobId)

@@ -3,9 +3,14 @@ package graft.table
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.graft.TypeShims
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** Iceberg-style table layout: immutable per-commit data directories +
   * an append-only JSON-lines snapshot log (the manifest). No Iceberg
@@ -20,6 +25,11 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *                                 or retention tombstone, append-only
   *   root/meta/checkpoint.jsonl    compaction of the log prefix (see below)
   *   root/meta/lineage.jsonl       per-(snapshot, bucket) lineage rows
+  *
+  * Reads resolve through the manifest and plan from parquet footers on
+  * the driver: the snapshot dirs to open come from the manifest, and the
+  * schema from the Spark row-metadata key of one part file's footer, so
+  * no Spark job runs before the caller's first action.
   *
   * Commit protocol, in two steps.
   *   - Stage: the Spark write goes to `data/<tier>/_staging/<uuid>/` and
@@ -105,22 +115,44 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     * what the commit records as `rows`, without re-scanning the data.
     * An all-empty write leaves one schema-only part file and sums to 0,
     * matching the former count()-based emptiness decision row for row. */
-  private def countParquetRows(dir: Path): Long = {
-    import scala.jdk.CollectionConverters._
-    val conf = TableIO.hadoopConf
-    val s = Files.walk(dir)
-    val parts =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toVector
-      finally s.close()
+  private def countParquetRows(dir: Path): Long =
     // footer opens cost ~ms each through the Hadoop layer — read them in
     // parallel so a many-file snapshot (wide writes) stays cheap
-    parts.asJava.parallelStream().mapToLong { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
+    partFiles(dir).asJava.parallelStream()
+      .mapToLong(p => withFooter(p)(_.getRecordCount)).sum
+
+  /** Every parquet data file under `dir`, at any depth, in path order. */
+  private def partFiles(dir: Path): Vector[Path] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toVector.sortBy(_.toString)
+    finally s.close()
+  }
+
+  /** Open one parquet file's footer on the driver: no Spark job. */
+  private def withFooter[T](file: Path)(f: ParquetFileReader => T): T = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toUri), TableIO.hadoopConf))
+    try f(r) finally r.close()
+  }
+
+  /** A snapshot's read schema, from the footer of its first part file:
+    * the data columns as Spark recorded them in its row-metadata key (the
+    * rule `ParquetFileFormat.readSchemaFromFooter` applies to Spark-written
+    * files), nullable as a file source reads them, then each `k=v`
+    * directory between `dir` and that file (the former source-partitioned
+    * layout) as a string column, where Spark's inference puts a partition
+    * column. `source` is pinned to string, as Spark's inference would type
+    * a former-layout snapshot's from dir names ("007" -> 7). */
+  private def snapshotSchema(dir: Path): StructType = {
+    val first = partFiles(dir).head
+    val json = withFooter(first)(_.getFooter.getFileMetaData
+      .getKeyValueMetaData.get(TableIO.SparkRowMetadata))
+    require(json != null, s"$first: no Spark schema in its parquet footer")
+    val dirCols = dir.relativize(first.getParent).asScala.map(_.toString)
+      .filter(_.contains('=')).map(seg => StructField(seg.takeWhile(_ != '='), StringType))
+    StructType((TypeShims.asNullable(DataType.fromJson(json).asInstanceOf[StructType]) ++
+      dirCols).map(f => if (f.name == "source") f.copy(dataType = StringType) else f))
   }
 
   private def deleteRec(p: java.nio.file.Path): Unit = {
@@ -209,7 +241,6 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     var maxId = 0L
     var upTo = 0L
     if (Files.exists(checkpointFile)) {
-      import scala.jdk.CollectionConverters._
       // dispatch on line PREFIXES (we write every line with a fixed field
       // order) — a contains() probe would let a jobId/tier STRING such as
       // "doneTier" masquerade as a structural line and brick the table
@@ -577,7 +608,10 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
     * snapshot the bucket predicate lands on the parquet scan for
     * row-group skipping. Visibility rules (last-commit-wins, retention
     * cutoffs) are identical to the full read — same keptBuckets
-    * resolution, filtered to the range. */
+    * resolution, filtered to the range. Planning runs no Spark job: the
+    * schema of every snapshot comes from one footer of the first live
+    * snapshot, read on the driver (`snapshotSchema`), not from Spark's
+    * schema inference. */
   def readRange(spark: SparkSession, tier: String, fromBucket: Long,
                 untilBucket: Long): Option[DataFrame] = {
     val st = synchronized { readLog() }
@@ -589,13 +623,9 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
       .filter(b => b >= fromBucket && b < untilBucket)).toMap
     val live = snaps.filter(s => s.dir.nonEmpty && kept(s.id).nonEmpty)
     if (live.isEmpty) return None
-    def path(s: Snapshot) = Paths.get(root, s.dir).toString
-    // schema inference runs a Spark job per parquet read: infer once for
-    // every snapshot. `source` is pinned to string, or a snapshot in the
-    // former source-partitioned layout types it from dir names ("007" -> 7)
-    val schema = StructType(spark.read.parquet(path(live.head)).schema.map(f =>
-      if (f.name == "source") f.copy(dataType = StringType) else f))
-    val dfs = live.map(s => spark.read.schema(schema).parquet(path(s)))
+    def path(s: Snapshot) = Paths.get(root, s.dir)
+    val schema = snapshotSchema(path(live.head))
+    val dfs = live.map(s => spark.read.schema(schema).parquet(path(s).toString))
     // ALWAYS filter to the surviving winning buckets — skipping the
     // filter when keep == declared let rows whose commit_bucket was
     // never declared leak past last-commit-wins (commit() does not
@@ -687,7 +717,6 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
   def lineageLines(): Seq[String] = synchronized {
     if (!Files.exists(lineageFile)) Nil
     else {
-      import scala.jdk.CollectionConverters._
       Files.readAllLines(lineageFile, StandardCharsets.UTF_8).asScala.toSeq
     }
   }
@@ -700,6 +729,8 @@ object TableIO {
   // one Configuration for all footer reads — each instantiation reloads
   // the XML default resources, which would tax every commit
   private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+  // the footer key under which Spark's parquet writer records its schema
+  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
   // JVM-wide commit monitors, one per canonical table root: same-JVM
   // writers serialize here BEFORE touching the (per-process) file lock
   private val rootMonitors =

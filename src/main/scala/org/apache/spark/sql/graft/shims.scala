@@ -19,4 +19,9 @@ object ColumnBridge {
   * override ExpectsInputTypes.inputTypes (implicit input coercion). */
 object TypeShims {
   type AbstractDataType = org.apache.spark.sql.types.AbstractDataType
+
+  /** The private[spark] `StructType.asNullable`: how a file source types
+    * the data columns it reads. */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
 }

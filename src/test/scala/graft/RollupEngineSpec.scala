@@ -22,6 +22,42 @@ class RollupEngineSpec extends AnyFunSuite with SparkSpec {
 
   val scale: Double = 1.0 / (1 << 24)
 
+  /** Stage `df` in the former source-partitioned layout and publish it,
+    * under one hold of the lock like any other write. */
+  def commitFormer(io: TableIO, tier: String, df: org.apache.spark.sql.DataFrame,
+                   bucket: Long): Unit = io.locked {
+    val dir = java.nio.file.Paths.get(io.root, "data", tier, "_staging", "former")
+    df.write.partitionBy("source").parquet(dir.toString)
+    io.publish(io.Staged(tier, dir, df.count()), Seq(bucket), "old")
+  }
+
+  /** Spark's inference over a tier's head snapshot (its lowest live id),
+    * `source` pinned to string: the schema a range read must plan with. */
+  def inferredSchema(io: TableIO, tier: String): org.apache.spark.sql.types.StructType = {
+    val head = io.snapshots().filter(s => s.tier == tier && s.dir.nonEmpty).minBy(_.id)
+    org.apache.spark.sql.types.StructType(
+      spark.read.parquet(java.nio.file.Paths.get(io.root, head.dir).toString).schema.map(f =>
+        if (f.name == "source") f.copy(dataType = org.apache.spark.sql.types.StringType) else f))
+  }
+
+  /** lineage.jsonl, as a set, equals each (tier, day)'s points, tokens and
+    * checksum recomputed with a groupBy over the committed features. */
+  def assertLineage(io: TableIO, tiers: Seq[String]): Unit = {
+    def field(l: String, k: String) =
+      ("\"" + k + "\":\"?([^,\"}]*)").r.findFirstMatchIn(l).get.group(1)
+    val logged = io.lineageLines().map(l => Seq("tier", "bucket", "rowsOut", "tokensIn",
+      "checksum").map(field(l, _))).toSet
+    val recomputed = tiers.flatMap { t =>
+      io.read(spark, t).get.groupBy("commit_bucket")
+        .agg(count(lit(1)), sum("tokens_in"), sum(hash(col("source"), col("bucket"),
+          graft.functions.duckRound(col("mean"), 9)).cast("long")))
+        .collect().map(r => Seq(t, r.getLong(0).toString, r.getLong(1).toString,
+          r.getLong(2).toString, r.getLong(3).toHexString))
+    }.toSet
+    assert(recomputed.map(_.head) == tiers.toSet)
+    assert(logged == recomputed, s"lineage.jsonl != committed features")
+  }
+
   test("cascade 1m->1h states equal direct 1h states; features match " +
     "kernel on window-concatenated signal (the rolled-up-point oracle)") {
     val states = TokenRollup.rowStates(bulk, scale)
@@ -159,8 +195,10 @@ class RollupEngineSpec extends AnyFunSuite with SparkSpec {
       assert(full.exceptAll(res).count() == 0 && res.exceptAll(full).count() == 0,
         s"$tierName resumed run differs from uninterrupted run")
     }
-    // lineage recorded for every (tier, day)
-    assert(ioB.lineageLines().nonEmpty)
+    // lineage recorded for every (tier, day), equal to the committed
+    // features after a clean run and after a resume
+    assertLineage(ioA, Seq("1m", "1h", "1d"))
+    assertLineage(ioB, Seq("1m", "1h", "1d"))
   }
 
   test("crash repair: coarser tiers pending over a committed finer tier " +
@@ -191,9 +229,10 @@ class RollupEngineSpec extends AnyFunSuite with SparkSpec {
       io.lineageLines().filter(_.contains(s"\"tier\":\"$t\"")).sorted
     for (t <- Seq("1h", "1d"))
       assert(lineage(a, t).nonEmpty && lineage(a, t) == lineage(b, t), s"$t lineage")
+    assertLineage(b, Seq("1m", "1h", "1d"))
   }
 
-  test("one rollup run: at most 13 Spark jobs, no staging dir left behind") {
+  test("one rollup run: at most 11 Spark jobs, no staging dir left behind") {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.graft.SparkTestHooks.drainListeners
@@ -211,25 +250,29 @@ class RollupEngineSpec extends AnyFunSuite with SparkSpec {
       RollupJob.run(spark, bulk, RollupJob.Conf(tableRoot = root, scale = scale))
       drainListeners(sc)
     } finally sc.removeSparkListener(listener)
-    // days collect 2 + fold 5 + lineage collect 2 + features write 2 +
-    // chunks write 2
-    assert(jobs.get <= 13, s"${jobs.get} Spark jobs in one run")
+    // days collect 2 + fold 5 + features write 2 (the lineage is observed
+    // on it) + chunks write 2
+    assert(jobs.get <= 11, s"${jobs.get} Spark jobs in one run")
     assert(new TableIO(root).snapshots().size == 6)
     val left = JPaths.get(root, "data").toFile.listFiles().toSeq
       .flatMap(t => t.list().filter(_ == "_staging").map(s => s"${t.getName}/$s"))
     assert(left.isEmpty, s"staging left behind: $left")
   }
 
-  test("range read infers the tier schema once, not once per snapshot") {
+  for (formerHead <- Seq(false, true))
+    test(s"range read plans with no Spark job, ${if (formerHead) "former" else "new"} " +
+      "layout at the head") {
     import spark.implicits._
     import java.nio.file.{Files => JFiles}
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.graft.SparkTestHooks.drainListeners
     val root = JFiles.createTempDirectory("graft_schema").toString
     val io = new TableIO(root, checkpointEvery = 100)
-    (0 until 5).foreach(i => io.commit("f",
-      Seq(("s1", i * 86400L, i.toDouble)).toDF("source", "commit_bucket", "value"),
-      Seq(i * 86400L), "j"))
+    (0 until 5).foreach { i =>
+      val df = Seq(("s1", i * 86400L, i.toDouble)).toDF("source", "commit_bucket", "value")
+      if (i == 0 && formerHead) commitFormer(io, "f", df, 0L)
+      else io.commit("f", df, Seq(i * 86400L), "j")
+    }
     val sc = spark.sparkContext
     val jobs = new AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -243,9 +286,27 @@ class RollupEngineSpec extends AnyFunSuite with SparkSpec {
       drainListeners(sc)
       df
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 1, s"${jobs.get} jobs building a 5-snapshot range read")
+    assert(jobs.get == 0, s"${jobs.get} jobs planning a 5-snapshot range read")
+    assert(slice.schema == inferredSchema(io, "f"))
     assert(slice.select("value").as[Double].collect().sorted.toSeq ==
       (0 until 5).map(_.toDouble))
+  }
+
+  test("range read schema equals Spark's inference, TIMESTAMP and _NTZ tables") {
+    import java.nio.file.{Files => JFiles}
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    val tiers = Seq("1m", "1h", "1d")
+    for ((input, tsType) <- Seq(bulk -> TimestampType,
+      bulk.withColumn("event_time", col("event_time").cast("timestamp_ntz")) -> TimestampNTZType)) {
+      val root = JFiles.createTempDirectory("graft_schema_eq").toString
+      RollupJob.run(spark, input, RollupJob.Conf(tableRoot = root, scale = scale))
+      val io = new TableIO(root)
+      for (t <- tiers ++ tiers.map(_ + "-chunks")) {
+        val schema = io.readRange(spark, t, Long.MinValue, Long.MaxValue).get.schema
+        assert(schema == inferredSchema(io, t), s"$t ($tsType)")
+        if (!t.endsWith("-chunks")) assert(schema("bucket").dataType == tsType, t)
+      }
+    }
   }
 
   test("staging leftovers: invisible to every reader, reclaimed by the " +
@@ -481,11 +542,8 @@ class RollupEngineSpec extends AnyFunSuite with SparkSpec {
     def table(legacy: Option[Int]) = {
       val io = new TableIO(JFiles.createTempDirectory("graft_mixed").toString)
       (0 until 3).foreach { i =>
-        if (legacy.contains(i)) io.locked {
-          val dir = JPaths.get(io.root, "data", "f", "_staging", "legacy")
-          df(day(i), i.toDouble).write.partitionBy("source").parquet(dir.toString)
-          io.publish(io.Staged("f", dir, 2L), Seq(day(i)), "old")
-        } else io.commit("f", df(day(i), i.toDouble), Seq(day(i)), "j")
+        if (legacy.contains(i)) commitFormer(io, "f", df(day(i), i.toDouble), day(i))
+        else io.commit("f", df(day(i), i.toDouble), Seq(day(i)), "j")
       }
       io
     }
@@ -501,6 +559,8 @@ class RollupEngineSpec extends AnyFunSuite with SparkSpec {
       val io = table(Some(legacy))
       assert(JFiles.exists(JPaths.get(io.root, "data", "f", s"snap-${legacy + 1}", "source=007")))
       assert(reads(io) == expected, s"legacy snapshot at day $legacy")
+      assert(io.read(spark, "f").get.schema == inferredSchema(io, "f"),
+        s"schema, legacy snapshot at day $legacy")
       val snap = io.compact(spark, "f").get
       val dir = JPaths.get(io.root, snap.dir)
       val names = dir.toFile.list()
