@@ -1,10 +1,10 @@
 package graft.engine
 
-import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService,
-  Executors, Future => JFuture, TimeUnit}
+import java.util.concurrent.TimeUnit
 
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
@@ -29,18 +29,18 @@ import graft.table.TableIO
   * - One ordered pass builds every tier (TierFold). Each pending day
   *   enters at its finest pending tier: as row states, or (crash repair:
   *   done at the finer tier, pending here) as its committed finer-tier
-  *   states read back from the table. One range exchange on (source,
-  *   minute) and one sort feed one `mapPartitions` fold that emits the
-  *   1m, 1h and 1d states together. No minute is cut; the hours and days
-  *   a partition edge cuts are rebuilt on the driver from their children,
-  *   collected by the fold's first action.
+  *   states read back from the table. One hash exchange on (source, day)
+  *   and one sort feed one `mapPartitions` fold that emits the 1m, 1h and
+  *   1d states together; no bucket is cut, so nothing is rebuilt, cached
+  *   or collected, and the kernel runs once per row, in the exchange's
+  *   map stage.
   * - Stage, then publish. The fold's states are finalized once, into one
-  *   frame of every pending tier. From it, concurrently, one features
-  *   write and one chunks write stage all tiers (each partitioned by
-  *   tier, see TableIO). The lineage of every tier is an `Observation` on
-  *   the features write, so it costs no job of its own. Then each tier is
-  *   published in manifest order: per tier features -> lineage -> chunks,
-  *   tiers finest first.
+  *   frame of every pending tier, which the features write consumes
+  *   directly (partitioned by tier, see TableIO); its lineage is an
+  *   `Observation` on that write, so it costs no job of its own. The
+  *   chunks write then encodes from the features write's staged files.
+  *   Then each tier is published in manifest order: per tier features ->
+  *   lineage -> chunks, tiers finest first.
   *   In that order a crash can at worst duplicate lineage on the re-run,
   *   never leave a done day without lineage rows; a failed staging
   *   publishes nothing. The run holds the table's commit lock
@@ -96,59 +96,22 @@ object RollupJob {
   private def dayOf(c: org.apache.spark.sql.Column) =
     floor(unix_timestamp(c) / 86400L).cast("long") * 86400L
 
-  /** Spark actions run concurrently, each on its own pool thread under
-    * one job group. `awaitAll` returns once all succeeded; on the first
-    * failure it cancels the group (and any job the group submits later),
-    * gives the siblings a bounded time to unwind, and rethrows. */
-  private final class Concurrently(sc: SparkContext, group: String) {
-    private val pool = Executors.newCachedThreadPool()
-    private val done = new ExecutorCompletionService[Any](pool)
-    private var submitted = 0
-
-    def apply[T](body: => T): JFuture[T] = {
-      submitted += 1
-      done.submit(new Callable[Any] {
-        def call(): Any = {
-          sc.setJobGroup(group, group)
-          try body finally sc.clearJobGroup()
-        }
-      }).asInstanceOf[JFuture[T]]
-    }
-
-    def awaitAll(): Unit = try {
-      var left = submitted
-      while (left > 0) {
-        val f = done.take()
-        left -= 1
-        try f.get()
-        catch {
-          case e: ExecutionException =>
-            sc.cancelJobGroupAndFutureJobs(group)
-            // cancelled jobs end promptly; the bound only guards a sibling
-            // stuck outside Spark (a footer read)
-            val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
-            while (left > 0 &&
-              done.poll(deadline - System.nanoTime(), TimeUnit.NANOSECONDS) != null)
-              left -= 1
-            throw e.getCause
-        }
-      }
-    } finally pool.shutdownNow()
+  /** Run `body` with its Spark jobs in job group `group`; on a failure,
+    * cancel the group (and any job it submits later) and rethrow. The
+    * caller's job group, if any, is restored. */
+  private def inJobGroup[T](sc: SparkContext, group: String)(body: => T): T = {
+    val saved = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel").map(k => k -> sc.getLocalProperty(k))
+    sc.setJobGroup(group, group)
+    try body
+    catch { case NonFatal(e) => sc.cancelJobGroupAndFutureJobs(group); throw e }
+    finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   /** Run (or resume) the full cascade. */
   def run(spark: SparkSession, tokens: DataFrame, conf: Conf): Seq[TierResult] = {
     val io = new TableIO(conf.tableRoot, conf.manifestCheckpointEvery)
-    // every persist() this run makes is released before returning —
-    // repeated run() calls on one session (the resume pattern) otherwise
-    // accumulate dead cached blocks for the session's lifetime
-    val cachedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def persisted(df: DataFrame): DataFrame = {
-      val p = df.persist()
-      cachedFrames += p
-      p
-    }
-    try io.locked {
+    io.locked {
       val allDays = tokens.select(dayOf(col("event_time")).as("d"))
         .distinct().collect().map(_.getLong(0)).sorted.toSeq
       // A day is done only when BOTH of its commits landed (features, then
@@ -166,10 +129,8 @@ object RollupJob {
       // repair), else as row states at level 0
       val entryDays = allDays.groupBy(d => pending.indexWhere(_.contains(d)))
         .removed(-1).toSeq.sortBy(_._1)
-      // persisted: the range sampler and the exchange read the row states
-      // once, so the kernel runs once per row
-      lazy val rowStates = persisted(TokenRollup.rowStates(tokens, conf.scale)
-        .withColumn("day", dayOf(col("event_time"))))
+      val rowStates = TokenRollup.rowStates(tokens, conf.scale)
+        .withColumn("day", dayOf(col("event_time")))
       // buckets keep the input's timestamp type (TIMESTAMP or _NTZ)
       val tsType = tokens.schema("event_time").dataType
       val units = entryDays.map { case (k, days) =>
@@ -179,84 +140,79 @@ object RollupJob {
         committed.getOrElse(TierFold.rowUnits(rowStates.where(col("day").isin(days: _*)), 0))
       }
 
-      // 2. one fold builds every tier; its edge collect is the first action
-      // and fills the cache. The driver makes the cut buckets exact.
+      // 2. one fold builds every tier; it runs in the features write's
+      // first stage
       val wins = conf.tiers.map { case (_, win) => TierFold.micros(win) }
       val tierName = element_at(typedLit(conf.tiers.map(_._1)), col("level") + 1)
       val states = units.reduceOption(_ unionByName _).map { u =>
-        val fold = persisted(TierFold(u, wins, pending.map(_.toSet)))
-        val edgeRows = fold.where(col("edge") || col("child"))
-          .as(Encoders.product[TierFold.Piece]).collect().toSeq
-        TierFold.onEdges(fold, edgeRows)
-        val edges = spark.createDataset(TierFold.combine(edgeRows, wins).filter(_.out))(
-          Encoders.product[TierFold.Piece]).toDF()
-        fold.where(col("out") && !col("edge")).unionByName(edges)
+        TierFold(u, wins, pending.map(_.toSet))
           .select(tierName.as("tier"), col("source"),
             TierFold.fromMicros(col("bucket"), tsType).as("bucket"),
             col("P"), col("rows_in"), col("tokens_in"))
       }
 
       // 3. finalize once, then stage every pending tier with one features
-      // write (observing the lineage) and one chunks write, concurrently
-      // over the filled cache, under one job group
+      // write (observing the lineage), and the chunks from its staged
+      // files, under one job group. Every tier dir is made first, so a tier
+      // that cannot be one fails the run before any write.
       val tiers = conf.tiers.map(_._1).zip(pending).collect { case (t, p) if p.nonEmpty => t }
       val group = s"graft-rollup-${conf.jobId}-${java.util.UUID.randomUUID()}"
-      val stage = new Concurrently(spark.sparkContext, group)
-      val staged = states.map { s =>
+      io.tierDirs(tiers ++ tiers.map(t => s"$t-chunks"))
+      val staged = states.map { s => inJobGroup(spark.sparkContext, group) {
         val f = TokenRollup.finalizeFeatures(s).withColumn("commit_bucket", dayOf(col("bucket")))
         // One file per (write task, tier). The rebalance sizes the files
-        // (AQE coalesces toward advisoryPartitionSizeInBytes): a
-        // metadata-sized run lands as one file per tier, the 1m tier at
-        // scale as size-targeted files, not a sliver per upstream task.
+        // (AQE coalesces toward advisoryPartitionSizeInBytes): the finest
+        // tier spreads over tasks by source, each coarser tier (keyed on
+        // null) lands in one task, so a metadata-sized tier is one file.
         // The sorts keep each source's rows contiguous, so parquet min/max
         // prune on `source`. The lineage is observed on the frame the write
         // consumes, so it is summed in the write's result stage, once per
         // task, with no job of its own.
         val lineage = Observation()
-        val featsW = stage(io.stage(tiers,
-          f.hint("rebalance", "source").sortWithinPartitions("tier", "source", "bucket")
-            .observe(lineage, udaf(LineageSums, LineageSums.inputEncoder)(col("tier"),
-              col("commit_bucket"), coalesce(col("tokens_in"), lit(0L)),
-              hash(col("source"), col("bucket"),
-                graft.functions.duckRound(col("mean"), 9)).cast("long")).as("lineage"))))
-        val ordered = f
+        val feats = io.stage(tiers, f
+          .withColumn("spread", when(col("tier") === conf.tiers.head._1, col("source")))
+          .hint("rebalance", "tier", "spread").drop("spread")
+          .sortWithinPartitions("tier", "source", "bucket")
+          .observe(lineage, udaf(LineageSums, LineageSums.inputEncoder)(col("tier"),
+            col("commit_bucket"), coalesce(col("tokens_in"), lit(0L)),
+            hash(col("source"), col("bucket"),
+              graft.functions.duckRound(col("mean"), 9)).cast("long")).as("lineage")))
+        // the chunks encode the staged points
+        val ordered = io.readStaged(spark, feats, f.schema)
           .withColumn("bs", unix_timestamp(col("bucket")))
           .groupBy(col("tier"), col("source"), col("commit_bucket"))
           .agg(sort_array(collect_list(struct((Seq("bs") ++ conf.chunkFeatures)
             .map(col): _*))).as("pts"))
-        val chunks = ordered.select(
+        val encoded = ordered.select(
           Seq(concat(col("tier"), lit("-chunks")).as("tier"), col("source"),
             col("commit_bucket"), size(col("pts")).as("n_points"),
             dod_encode(col("pts.bs")).as("ts_dod")) ++
             conf.chunkFeatures.map(c =>
               gorilla_encode(col(s"pts.$c")).as(s"${c}_gor")): _*)
-        val chunksW = stage(io.stage(tiers.map(t => s"$t-chunks"),
-          chunks.sortWithinPartitions("tier", "source", "commit_bucket")))
-        (lineage, featsW, chunksW)
-      }
-      stage.awaitAll()
-      // tier -> (day, points, tokens, checksum), days ascending. The
-      // observed row reaches the Observation through the listener bus after
-      // the write returns; the bound turns a lost event into a failed run
-      // (nothing is published yet) instead of a hang.
-      val lineage = staged.fold(Map.empty[String, Seq[(Long, Long, Long, String)]]) { s =>
-        Await.result(s._1.future, Duration(60, TimeUnit.SECONDS))
+        val chunks = io.stage(tiers.map(t => s"$t-chunks"),
+          encoded.sortWithinPartitions("tier", "source", "commit_bucket"))
+        // tier -> (day, points, tokens, checksum), days ascending. The
+        // observed row reaches the Observation through the listener bus
+        // after the write returns; the bound turns a lost event into a
+        // failed run (nothing is published yet) instead of a hang.
+        val sums = Await.result(lineage.future, Duration(60, TimeUnit.SECONDS))
           .getMap[Row, Row](0).toSeq
           .map { case (k, v) =>
             k.getString(0) -> (k.getLong(1), v.getLong(0), v.getLong(1), v.getLong(2).toHexString)
           }.sortBy(_._2._1).groupMap(_._1)(_._2)
-      }
+        (sums, feats, chunks)
+      }}
 
       // 4. publish in manifest order: per tier features -> lineage -> chunks
       val results = conf.tiers.map(_._1).zip(pending).map {
         case (tier, days) if days.isEmpty => TierResult(tier, Nil, 0)
         case (tier, days) =>
-          val (_, featsW, chunksW) = staged.get
+          val (lineage, feats, chunks) = staged.get
           val i = tiers.indexOf(tier)
           val rows = lineage.getOrElse(tier, Nil)
-          io.publish(featsW.get()(i), days, conf.jobId)
+          io.publish(feats(i), days, conf.jobId)
           io.appendLineage(conf.jobId, tier, rows)
-          io.publish(chunksW.get()(i), days, conf.jobId)
+          io.publish(chunks(i), days, conf.jobId)
           // tier point count = the lineage rows' points summed
           TierResult(tier, days, rows.map(_._2).sum)
       }
@@ -285,7 +241,7 @@ object RollupJob {
         }
       }
       results
-    } finally cachedFrames.foreach(_.unpersist(blocking = false))
+    }
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,6 +1,6 @@
 package graft.engine
 
-import scala.collection.mutable.{ArrayBuffer, Queue}
+import scala.collection.mutable.Queue
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.catalyst.expressions.PreciseTimestampConversion
@@ -12,35 +12,30 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.TokenState
 
-/** One ordered pass builds every tier: the units are range-partitioned
-  * once on (source, 1m bucket) and sorted within partitions on (source,
-  * ts, doc_id), and one `mapPartitions` fold emits the 1m, 1h and 1d
-  * bucket states together (*Factor Windows*, ICDE 2022: correlated window
-  * sizes share one scan and one sort).
+/** One ordered pass builds every tier: the units are hash-partitioned
+  * once on (source, coarsest bucket) and sorted within partitions on
+  * (source, ts, doc_id), and one `mapPartitions` fold emits the 1m, 1h and
+  * 1d bucket states together (*Factor Windows*, ICDE 2022: correlated
+  * window sizes share one scan and one sort).
   *
   * Units. A unit enters at a level: a row state at level 0, a committed
   * tier-(k-1) state at level k (a day whose finest pending tier is k; its
   * ts is the bucket start, doc_id ""). Each level holds one open (source,
-  * bucket); closing a level-j bucket emits it and feeds it with `++` into
-  * level j+1, under floor(start / W)·W, the bucket `window()` assigns. So
-  * every tier-j state (j >= 1) is the left fold of its tier-(j-1) states
-  * in bucket order. A level-j bucket waits for its parent to close before
-  * it is emitted, so a task buffers at most the fan-out (60 minutes, 24
-  * hours), never a partition.
+  * bucket); closing a level-j bucket emits it (when its day is pending at
+  * tier j) and feeds it with `++` into level j+1, under floor(start / W)·W,
+  * the bucket `window()` assigns. So every tier-j state (j >= 1) is the
+  * left fold of its tier-(j-1) states in bucket order, and a task holds
+  * one open bucket per level, never a partition.
   *
-  * Edges. The range key never cuts a minute, so every 1m state is the
-  * sequential fold of its rows in one task, whatever the range bounds.
-  * Each partition flags its first and last bucket at every coarser level
-  * (`edge`) and the children of those buckets (`child`); the driver
-  * collects them and `combine` rebuilds every flagged bucket as the
-  * in-order `++` of its complete children. Joining coarser pieces directly
-  * would reassociate the summed fields: the result would then depend on
-  * where the cuts fall, and a repair from committed 1m states would differ
-  * from a clean run in the last bits.
+  * Partitioning. The hash key is (source, coarsest bucket): the UTC day
+  * for RollupJob's tiers. Every bucket of every level then lies whole in
+  * one task, so each state is the sequential fold of its units whatever
+  * the partition count, and nothing is rebuilt from pieces: a repair from
+  * committed 1m states equals a clean run bit for bit. The unit of
+  * parallelism is one (source, coarsest bucket).
   *
-  * `TokenRollup.mergeToBuckets`/`cascade` run the fold with one window:
-  * the range key is then the bucket itself, so no bucket is cut and no
-  * piece is an edge.
+  * `TokenRollup.mergeToBuckets`/`cascade` run the fold with one window,
+  * so their hash key is the bucket itself.
   */
 private[graft] object TierFold {
 
@@ -48,13 +43,9 @@ private[graft] object TierFold {
   final case class Entry(source: String, ts: Long, doc_id: String, level: Int,
                          P: TokenState, rows: Long, tokens: Long)
 
-  /** A tier-`level` bucket state (bucket start in epoch micros). `out`:
-    * its day is pending at that tier; `edge`: a coarser bucket first or
-    * last in its partition, so possibly partial; `child`: its parent is an
-    * edge. */
+  /** A tier-`level` bucket state (bucket start in epoch micros). */
   final case class Piece(level: Int, source: String, bucket: Long, P: TokenState,
-                         rows_in: Long, tokens_in: Long, out: Boolean,
-                         edge: Boolean, child: Boolean)
+                         rows_in: Long, tokens_in: Long)
 
   private val DayMicros = 86400L * 1000000L
 
@@ -70,11 +61,6 @@ private[graft] object TierFold {
 
   def fromMicros(c: Column, t: DataType): Column =
     ColumnBridge.column(PreciseTimestampConversion(ColumnBridge.expression(c), LongType, t))
-
-  /** Called with each run's fold output and the edge rows the driver
-    * collected (tests observe cuts through it: a cut bucket has an edge
-    * piece from each partition it spans). */
-  @volatile private[graft] var onEdges: (DataFrame, Seq[Piece]) => Unit = (_, _) => ()
 
   /** Row states (source, event_time, doc_id, P, row_tokens) as units
     * entering at `level`. A cascaded state carries `row_rows`, the source
@@ -95,91 +81,56 @@ private[graft] object TierFold {
     rowUnits(states.select(col("source"), col("bucket").as("event_time"), col("P"),
       col("tokens_in").as("row_tokens"), col("rows_in").as("row_rows")), level)
 
-  /** Fold `units` (source, ts, doc_id, level, P, rows, tokens) into every
-    * tier's pieces. `wins` are the tier windows in micros, finest first;
-    * `pending(j)` says which days (epoch seconds) to emit at tier j. */
+  /** Fold `units` (source, ts, doc_id, level, P, rows, tokens) into the
+    * pieces of every tier. `wins` are the tier windows in micros, finest
+    * first, each dividing the next; `pending(j)` says which days (epoch
+    * seconds) to emit at tier j. */
   def apply(units: DataFrame, wins: Seq[Long], pending: Seq[Long => Boolean]): DataFrame = {
     val w = wins.toArray
     val p = pending.toArray
-    units.repartitionByRange(col("source"), col("ts") - pmod(col("ts"), lit(w(0))))
+    units.repartition(col("source"), col("ts") - pmod(col("ts"), lit(w.last)))
       .sortWithinPartitions("source", "ts", "doc_id")
       .as(Encoders.product[Entry])
       .mapPartitions(it => new Fold(w, p).run(it))(Encoders.product[Piece])
       .toDF()
   }
 
-  /** The exact state of every edge bucket, from the collected edge and
-    * child rows: each rebuilt from its children, finest level first. 1m
-    * pieces are never cut, so they enter whole. */
-  def combine(rows: Seq[Piece], wins: Seq[Long]): Seq[Piece] = {
-    val byLevel = rows.groupBy(_.level)
-    val edges = ArrayBuffer.empty[Piece]
-    var finer = byLevel.getOrElse(0, Nil)
-    for (j <- 1 until wins.length) {
-      val kids = finer.groupBy(k => (k.source, Math.floorDiv(k.bucket, wins(j)) * wins(j)))
-      finer = byLevel.getOrElse(j, Nil).groupBy(p => (p.source, p.bucket)).toSeq.map {
-        case (_, Seq(one)) if !one.edge => one
-        case (key, ps) =>
-          val ks = kids.getOrElse(key, sys.error(s"edge bucket $key at tier $j has no children"))
-            .sortBy(_.bucket)
-          val e = Piece(j, key._1, key._2, ks.map(_.P).reduceLeft(_ ++ _),
-            ks.map(_.rows_in).sum, ks.map(_.tokens_in).sum, ps.head.out,
-            edge = true, child = false)
-          edges += e
-          e
-      }
-    }
-    edges.toSeq
-  }
-
   /** The per-partition fold over sorted entries. */
   private final class Fold(wins: Array[Long], pending: Array[Long => Boolean]) {
     private final class Open(val source: String, val start: Long, var p: TokenState,
-                             var rows: Long, var tokens: Long, val first: Boolean) {
-      val kids = ArrayBuffer.empty[Piece]
-    }
+                             var rows: Long, var tokens: Long)
     private val n = wins.length
     private val open = new Array[Open](n)
-    private val seen = new Array[Boolean](n)
     private val ready = Queue.empty[Piece]
 
-    private def emit(p: Piece): Unit = if (p.out || p.edge || p.child) ready += p
-
-    private def close(j: Int, last: Boolean): Unit = {
+    private def close(j: Int): Unit = {
       val o = open(j)
       open(j) = null
-      val edge = j > 0 && (o.first || last)
-      o.kids.foreach(k => emit(k.copy(child = edge)))
-      val day = Math.floorDiv(o.start, DayMicros) * 86400L
-      val piece = Piece(j, o.source, o.start, o.p, o.rows, o.tokens,
-        pending(j)(day), edge, child = false)
-      if (j + 1 < n) feed(j + 1, piece) else emit(piece)
+      val piece = Piece(j, o.source, o.start, o.p, o.rows, o.tokens)
+      if (pending(j)(Math.floorDiv(o.start, DayMicros) * 86400L)) ready += piece
+      if (j + 1 < n) feed(j + 1, piece)
     }
 
     /** Add `c` (a row at level 0, else a closed tier-(j-1) state) to level
       * j's open bucket, closing it first when `c` starts another. */
     private def feed(j: Int, c: Piece): Unit = {
       val start = Math.floorDiv(c.bucket, wins(j)) * wins(j)
-      var o = open(j)
+      val o = open(j)
       if (o != null && o.start == start && o.source == c.source) {
         o.p = o.p ++ c.P
         o.rows += c.rows_in
         o.tokens += c.tokens_in
       } else {
-        if (o != null) close(j, last = false)
-        o = new Open(c.source, start, c.P, c.rows_in, c.tokens_in, first = !seen(j))
-        open(j) = o
-        seen(j) = true
+        if (o != null) close(j)
+        open(j) = new Open(c.source, start, c.P, c.rows_in, c.tokens_in)
       }
-      if (j > 0) o.kids += c
     }
 
     private def add(e: Entry): Unit = {
       // everything open below the unit's level lies before it
       var j = 0
-      while (j < e.level) { if (open(j) != null) close(j, last = false); j += 1 }
-      feed(e.level, Piece(e.level - 1, e.source, e.ts, e.P, e.rows, e.tokens,
-        out = false, edge = false, child = false))
+      while (j < e.level) { if (open(j) != null) close(j); j += 1 }
+      feed(e.level, Piece(e.level - 1, e.source, e.ts, e.P, e.rows, e.tokens))
     }
 
     def run(in: Iterator[Entry]): Iterator[Piece] = new Iterator[Piece] {
@@ -188,7 +139,7 @@ private[graft] object TierFold {
         while (ready.isEmpty && !drained) {
           if (in.hasNext) add(in.next())
           else {
-            for (j <- 0 until n) if (open(j) != null) close(j, last = true)
+            for (j <- 0 until n) if (open(j) != null) close(j)
             drained = true
           }
         }

@@ -44,9 +44,9 @@ object TokenRollup {
   /** Compose unit states (rows of `rowStates`, or cascaded states with
     * `row_rows`) in (event_time, doc_id) order into one state per
     * (source, `win` bucket): TierFold's fold with a single window level,
-    * so the range key is the bucket and no bucket is cut. `orderCols`
-    * must start with event_time; the fold's order refines any such order.
-    * The bucket keeps the input's timestamp type. */
+    * hash-partitioned on (source, bucket), so each bucket is folded whole
+    * in one task. `orderCols` must start with event_time; the fold's order
+    * refines any such order. The bucket keeps the input's timestamp type. */
   def mergeToBuckets(units: DataFrame, win: String,
                      orderCols: Seq[String]): DataFrame = {
     require(orderCols.headOption.contains("event_time"),
@@ -59,7 +59,7 @@ object TokenRollup {
     fold(TierFold.stateUnits(bucketStates, 0), win, bucketStates.schema("bucket").dataType)
 
   private def fold(units: DataFrame, win: String, tsType: DataType): DataFrame =
-    TierFold(units, Seq(TierFold.micros(win)), Seq(_ => true)).where(col("out"))
+    TierFold(units, Seq(TierFold.micros(win)), Seq(_ => true))
       .select(col("source"), TierFold.fromMicros(col("bucket"), tsType).as("bucket"),
         col("P"), col("rows_in"), col("tokens_in"))
 

@@ -505,15 +505,29 @@ final class TableIO(val root: String, val checkpointEvery: Int = 16) {
   private[graft] def stage(tiers: Seq[String], df: DataFrame): Seq[Staged] =
     stageWrite(tiers, df, byTier = true)
 
-  private def stageWrite(tiers: Seq[String], df: DataFrame, byTier: Boolean): Seq[Staged] = {
+  /** The rows of one multi-tier `stage`, before publish, with `tier` from
+    * the subdir names, read under `schema` (the staged frame's) so that no
+    * inference job runs. A write that staged no rows reads back empty. */
+  private[graft] def readStaged(spark: SparkSession, staged: Seq[Staged],
+                                schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(staged.head.dir.getParent.toString)
+
+  /** Create the data dir of each of `tiers` (a writer that stages several
+    * writes calls this for all of them first, so a tier that cannot be a
+    * dir fails the run before any Spark job). */
+  private[graft] def tierDirs(tiers: Seq[String]): Unit = {
     // tier names become filesystem paths — keep them path- and JSON-safe
     tiers.foreach(t => require(t.matches("[A-Za-z0-9._-]+"),
       s"tier '$t' must match [A-Za-z0-9._-]+"))
+    tiers.foreach(t => Files.createDirectories(Paths.get(root, "data", t)))
+  }
+
+  private def stageWrite(tiers: Seq[String], df: DataFrame, byTier: Boolean): Seq[Staged] = {
     // read() resolves bucket collisions through commit_bucket; enforce the
     // column at write time instead of failing at read time
     require(df.columns.contains("commit_bucket"),
       s"commit('${tiers.mkString(",")}'): DataFrame must carry a commit_bucket column")
-    tiers.foreach(t => Files.createDirectories(Paths.get(root, "data", t)))
+    tierDirs(tiers)
     val dir = Paths.get(root, "data", tiers.head, TableIO.StagingDir,
       java.util.UUID.randomUUID().toString)
     Files.createDirectories(dir.getParent)

@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 /** Supplementary per-query timing harness for the optimization round —
   * graft.Bench is frozen for measurement, so isolation runs live here.
   * Mirrors Bench's session config and forced-evaluation protocol exactly
@@ -19,12 +16,6 @@ import org.apache.spark.sql.functions._
   * and total_min.
   */
 object BenchExtra {
-
-  private def forceEval(df: DataFrame): Long = {
-    val cols = df.columns.map(c => col(c).cast("string"))
-    df.select(xxhash64(cols: _*).cast("double").as("h"))
-      .agg(avg("h"), count(lit(1))).collect()(0).getLong(1)
-  }
 
   /** Seconds one rep of `body` took, or None when it threw. */
   private[graft] def timeRep(name: String)(body: => Unit): Option[Double] = {

@@ -36,20 +36,15 @@ object RollupBench {
       graft.functions.feature("hjorth_mobility", col("tokens"), p).as("hjorth_mobility"),
       graft.functions.feature("spect_entropy", col("tokens"), p).as("spect_entropy"),
       graft.functions.feature("higuchi_fd", col("tokens"), p).as("higuchi_fd"))
-    phase("raw")(force(raw))
+    phase("raw")(forceEval(raw))
     val states = TokenRollup.rowStates(tokens, scale)
     val m1 = TokenRollup.mergeToBuckets(states, "1 minute", Seq("event_time", "doc_id")).persist()
-    phase("m1")(force(TokenRollup.finalizeFeatures(m1)))
+    phase("m1")(forceEval(TokenRollup.finalizeFeatures(m1)))
     val h1 = TokenRollup.cascade(m1, "1 hour").persist()
-    phase("h1")(force(TokenRollup.finalizeFeatures(h1)))
-    phase("d1")(force(TokenRollup.finalizeFeatures(TokenRollup.cascade(h1, "1 day"))))
+    phase("h1")(forceEval(TokenRollup.finalizeFeatures(h1)))
+    phase("d1")(forceEval(TokenRollup.finalizeFeatures(TokenRollup.cascade(h1, "1 day"))))
     m1.unpersist(); h1.unpersist()
     phase("sum")(tokens.agg(sum("n_tok")).collect()(0).getLong(0))
-  }
-
-  private def force(df: org.apache.spark.sql.DataFrame): Unit = {
-    val cols = df.columns.map(c => col(c).cast("string"))
-    df.select(xxhash64(cols: _*).cast("double").as("h")).agg(avg("h")).collect()
   }
 
   def main(args: Array[String]): Unit = {

@@ -160,10 +160,10 @@ class HardeningSpec extends AnyFunSuite with SparkSpec {
 
   /** Run a rollup whose `failing` tier cannot stage (a plain file sits
     * where its directory belongs) and check that it rethrows, leaves no
-    * Spark job running, publishes nothing, and that the actions staged
-    * after the failure (found under `cancelled`) were cancelled rather
-    * than waited out: none got as far as its job commit, which leaves a
-    * _SUCCESS marker. */
+    * Spark job running, publishes nothing, and that no staged write of
+    * the run (found under `cancelled`) got as far as its job commit,
+    * which leaves a _SUCCESS marker: every tier dir is made before the
+    * first write, so the run fails before any write starts. */
   private def failedStaging(failing: String, cancelled: Seq[String]): Unit = {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
@@ -193,14 +193,14 @@ class HardeningSpec extends AnyFunSuite with SparkSpec {
   }
 
   // the chunks write cannot make the last tier's dir: the features write of
-  // every tier, staged alongside it under data/1m, is cancelled
+  // every tier, staged under data/1m, never starts
   test("RollupJob: a failed staging cancels the run's Spark jobs and " +
     "publishes nothing") {
     failedStaging("1d-chunks", cancelled = Seq("1d", "1m"))
   }
 
   // the chunks write fails on its first tier: the features write and every
-  // other action are cancelled or never start
+  // other action never start
   test("RollupJob: a failed first-tier staging cancels every later action") {
     failedStaging("1m-chunks", cancelled = Seq("1m", "1h", "1h-chunks", "1d", "1d-chunks"))
   }

@@ -78,33 +78,33 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
       s"gap-fill plan hash-shuffled $hashExchanges times:\n$p")
   }
 
-  test("tier merge: mergeToBuckets shuffles once, by range on source, no Window") {
+  test("tier merge: mergeToBuckets hashes once on (source, bucket), no Window") {
     spark.sparkContext.setLogLevel("ERROR")
     val states = graft.engine.TokenRollup.rowStates(
       graft.gen.TokenGen.bulk(spark, 200, nSources = 4, minLen = 16, maxLen = 64), 1.0)
     val p = graft.engine.TokenRollup.mergeToBuckets(states, "1 minute",
       Seq("event_time", "doc_id")).queryExecution.executedPlan.toString
     assert("Exchange ".r.findAllMatchIn(p).size == 1 &&
-      p.contains("Exchange rangepartitioning(source"),
-      s"the merge must shuffle once, by range on source:\n$p")
+      "Exchange hashpartitioning\\(source#\\d+, \\(".r.findFirstIn(p).isDefined,
+      s"the merge must shuffle once, by hash on (source, bucket):\n$p")
     assert(!p.contains("Window"), s"no Window in the merge:\n$p")
   }
 
-  test("tier fold: RollupJob's states come from one range exchange, no Window") {
+  test("tier fold: one hash exchange on (source, day), no Window") {
     spark.sparkContext.setLogLevel("ERROR")
-    var fold: org.apache.spark.sql.DataFrame = null
-    graft.engine.TierFold.onEdges = (f, _) => fold = f
-    try graft.engine.RollupJob.run(spark,
-      graft.gen.TokenGen.bulk(spark, 200, nSources = 4, minLen = 16, maxLen = 64),
-      graft.engine.RollupJob.Conf(
-        tableRoot = java.nio.file.Files.createTempDirectory("graft_plan").toString))
-    finally graft.engine.TierFold.onEdges = (_, _) => ()
-    // the run has released its cache, so this is the fold's own plan
+    import graft.engine.{Rollup, TierFold, TokenRollup}
+    // the fold exactly as RollupJob builds it for a clean run
+    val units = TierFold.rowUnits(TokenRollup.rowStates(
+      graft.gen.TokenGen.bulk(spark, 200, nSources = 4, minLen = 16, maxLen = 64), 1.0), 0)
+    val fold = TierFold(units, Rollup.Tiers.map { case (_, w) => TierFold.micros(w) },
+      Rollup.Tiers.map(_ => (_: Long) => true))
     val p = fold.queryExecution.executedPlan.toString
     val exchanges = "Exchange ".r.findAllMatchIn(p).size
-    val ranges = "Exchange rangepartitioning\\(source".r.findAllMatchIn(p).size
-    assert(exchanges == 1 && ranges == 1,
-      s"the fold must shuffle once, by range on source:\n$p")
+    val day = TierFold.micros("1 day")
+    val hashes = s"Exchange hashpartitioning\\(source#\\d+, \\(ts#\\d+L? - pmod\\(ts#\\d+L?, ${day}\\)\\)"
+      .r.findAllMatchIn(p).size
+    assert(exchanges == 1 && hashes == 1,
+      s"the fold must shuffle once, by hash on (source, day):\n$p")
     assert(!p.contains("Window"), s"no Window in the tier fold:\n$p")
   }
 

@@ -58,6 +58,35 @@ class RollupEngineSpec extends AnyFunSuite with SparkSpec {
     assert(logged == recomputed, s"lineage.jsonl != committed features")
   }
 
+  /** No tier dir under `root` keeps a `_staging` dir after a run. */
+  def assertNoStaging(root: String): Unit = {
+    val left = java.nio.file.Paths.get(root, "data").toFile.listFiles().toSeq
+      .flatMap(t => t.list().filter(_ == "_staging").map(s => s"${t.getName}/$s"))
+    assert(left.isEmpty, s"staging left behind: $left")
+  }
+
+  /** Every chunked feature of every tier decodes to its committed point's
+    * value bit for bit (doubleToLongBits: NaN and -0.0 count), with the
+    * same (source, bucket) keys on both sides. */
+  def assertChunksEqualFeatures(io: TableIO, tiers: Seq[String]): Unit = {
+    val feats = RollupJob.Conf("").chunkFeatures
+    def points(df: org.apache.spark.sql.DataFrame) =
+      df.select((Seq(col("source"), col("bucket_s")) ++ feats.map(col)): _*).collect()
+        .map(r => (r.getString(0), r.getLong(1)) -> feats.indices.map(i =>
+          if (r.isNullAt(i + 2)) None
+          else Some(java.lang.Double.doubleToLongBits(r.getDouble(i + 2))))).toSeq
+    for (t <- tiers) {
+      val chunks = points(io.readChunkPoints(spark, t).get)
+      val committed = points(io.read(spark, t).get
+        .withColumn("bucket_s", unix_timestamp(col("bucket"))))
+      assert(committed.nonEmpty && chunks.size == committed.size &&
+        chunks.map(_._1).distinct.size == chunks.size, s"$t: chunk points != tier points")
+      val want = committed.toMap
+      val bad = chunks.filter { case (k, v) => !want.get(k).contains(v) }
+      assert(bad.isEmpty, s"$t: ${bad.size} chunk points differ, e.g. ${bad.take(2)}")
+    }
+  }
+
   test("cascade 1m->1h states equal direct 1h states; features match " +
     "kernel on window-concatenated signal (the rolled-up-point oracle)") {
     val states = TokenRollup.rowStates(bulk, scale)
@@ -232,8 +261,8 @@ class RollupEngineSpec extends AnyFunSuite with SparkSpec {
     assertLineage(b, Seq("1m", "1h", "1d"))
   }
 
-  test("one rollup run: at most 11 Spark jobs, no staging dir left behind") {
-    import java.nio.file.{Files => JFiles, Paths => JPaths}
+  test("one rollup run: at most 7 Spark jobs, no staging dir left behind") {
+    import java.nio.file.{Files => JFiles}
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.graft.SparkTestHooks.drainListeners
     bulk.count() // fill the input's cache outside the count
@@ -250,13 +279,64 @@ class RollupEngineSpec extends AnyFunSuite with SparkSpec {
       RollupJob.run(spark, bulk, RollupJob.Conf(tableRoot = root, scale = scale))
       drainListeners(sc)
     } finally sc.removeSparkListener(listener)
-    // days collect 2 + fold 5 + features write 2 (the lineage is observed
-    // on it) + chunks write 2
-    assert(jobs.get <= 11, s"${jobs.get} Spark jobs in one run")
+    // days collect 2 + features write 3 (fold exchange, rebalance, write;
+    // the lineage is observed on it) + chunks write 2
+    assert(jobs.get <= 7, s"${jobs.get} Spark jobs in one run")
     assert(new TableIO(root).snapshots().size == 6)
-    val left = JPaths.get(root, "data").toFile.listFiles().toSeq
-      .flatMap(t => t.list().filter(_ == "_staging").map(s => s"${t.getName}/$s"))
-    assert(left.isEmpty, s"staging left behind: $left")
+    assertNoStaging(root)
+  }
+
+  test("chunks decode to the committed features bit for bit, after a clean " +
+    "run and after a crash repair") {
+    import java.nio.file.Files
+    val clean = Files.createTempDirectory("graft_chunks_clean").toString
+    val repaired = Files.createTempDirectory("graft_chunks_repair").toString
+    val conf = RollupJob.Conf(tableRoot = clean, scale = scale, jobId = "j")
+    RollupJob.run(spark, bulk, conf)
+    assertChunksEqualFeatures(new TableIO(clean), Seq("1m", "1h", "1d"))
+    RollupJob.run(spark, bulk, conf.copy(tableRoot = repaired, tiers = Seq("1m" -> "1 minute")))
+    val res = RollupJob.run(spark, bulk, conf.copy(tableRoot = repaired))
+    assert(res.map(r => r.tier -> r.newDays.nonEmpty) ==
+      Seq("1m" -> false, "1h" -> true, "1d" -> true))
+    assertChunksEqualFeatures(new TableIO(repaired), Seq("1m", "1h", "1d"))
+  }
+
+  test("a day whose every row has n_tok < 2 publishes 0-row features and " +
+    "chunks snapshots and counts as done") {
+    import spark.implicits._
+    import java.nio.file.Files
+    val day0 = 1704067200L // 2024-01-01T00:00:00Z
+    def docs(day: Long, n: Int) = (0 until 24).map { h =>
+      (s"d$day/$h", Array.tabulate(n)(j => h * 10 + j), n, s"s${h % 3}",
+        new java.sql.Timestamp((day + h * 3600L) * 1000L))
+    }.toDF("doc_id", "tokens", "n_tok", "source", "event_time")
+    val root = Files.createTempDirectory("graft_short").toString
+    val conf = RollupJob.Conf(tableRoot = root, scale = scale, jobId = "j")
+    RollupJob.run(spark, docs(day0, 16), conf)
+    // the second day's rows all fall below the kernel's n >= 2
+    val res = RollupJob.run(spark, docs(day0, 16).unionByName(docs(day0 + 86400L, 1)),
+      conf.copy(jobId = "short"))
+    assert(res.map(r => (r.tier, r.newDays, r.points)) ==
+      Seq("1m", "1h", "1d").map(t => (t, Seq(day0 + 86400L), 0L)))
+    val io = new TableIO(root)
+    val tiers = Seq("1m", "1m-chunks", "1h", "1h-chunks", "1d", "1d-chunks")
+    assert(io.snapshots().filter(_.jobId == "short").map(s => (s.tier, s.dir, s.rows)) ==
+      tiers.map(t => (t, "", 0L)))
+    tiers.foreach(t => assert(io.doneBuckets(t) == Set(day0, day0 + 86400L), t))
+    assert(RollupJob.run(spark, docs(day0 + 86400L, 1), conf).forall(_.newDays.isEmpty))
+    assertChunksEqualFeatures(io, Seq("1m", "1h", "1d"))
+    assertNoStaging(root)
+  }
+
+  test("coarse tiers: each 1h and 1d snapshot is one file, the 1m tier " +
+    "spreads, at 8 partitions with AQE coalescing off") {
+    import java.nio.file.{Files => JFiles, Paths => JPaths}
+    val root = JFiles.createTempDirectory("graft_coarse").toString
+    withPartitions(8)(RollupJob.run(spark, TokenGen.bulk(spark, 300, nSources = 16,
+      minLen = 16, maxLen = 128), RollupJob.Conf(tableRoot = root, scale = scale)))
+    val files = new TableIO(root).snapshots().map(s => s.tier ->
+      JPaths.get(root, s.dir).toFile.list().count(_.startsWith("part-"))).toMap
+    assert(files("1h") == 1 && files("1d") == 1 && files("1m") > 1, s"part files: $files")
   }
 
   for (formerHead <- Seq(false, true))

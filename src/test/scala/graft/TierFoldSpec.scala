@@ -12,9 +12,10 @@ import graft.gen.SplitMix64
 import graft.gen.TokenGen.Doc
 import graft.table.TableIO
 
-/** RollupJob's one-pass fold across partition edges. Each spec runs with
+/** RollupJob's one-pass fold over many partitions. Each spec runs with
   * many shuffle partitions and AQE coalescing off: at the default settings
-  * AQE coalesces spec-sized data into one partition and no edge is cut. */
+  * AQE coalesces spec-sized data into one partition and every bucket is
+  * folded in one task whatever the partitioning. */
 class TierFoldSpec extends AnyFunSuite with SparkSpec {
   private val Tiers = Seq("1m", "1h", "1d")
   private val Wins = Seq("1 minute", "1 hour", "1 day")
@@ -22,35 +23,18 @@ class TierFoldSpec extends AnyFunSuite with SparkSpec {
 
   import TierFoldSpec.{Key, St}
 
-  private def withPartitions[T](n: Int)(body: => T): T = {
-    val set = Seq("spark.sql.shuffle.partitions" -> n.toString,
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val old = set.map { case (k, _) => k -> spark.conf.getOption(k) }
-    set.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
-  /** Run RollupJob and return the edge rows its fold collected; asserts
-    * that the fold emitted each minute once, from one task. */
-  private def runJob(tokens: DataFrame, conf: RollupJob.Conf): Seq[TierFold.Piece] = {
-    var edges = Seq.empty[TierFold.Piece]
-    var split = -1L
-    TierFold.onEdges = { (fold, e) =>
-      edges = e
-      split = fold.where(col("level") === 0).groupBy("source", "bucket").count()
+  /** Run RollupJob and assert that its fold emitted each (tier, source,
+    * bucket) once: a bucket whose units two fold tasks shared would be
+    * committed as one row per task. */
+  private def runJob(tokens: DataFrame, conf: RollupJob.Conf): Unit = {
+    RollupJob.run(spark, tokens, conf)
+    val io = new TableIO(conf.tableRoot)
+    for ((t, _) <- conf.tiers) {
+      val twice = io.read(spark, t).get.groupBy("source", "bucket").count()
         .where(col("count") > 1).count()
+      assert(twice == 0, s"$t: $twice buckets emitted more than once")
     }
-    try RollupJob.run(spark, tokens, conf) finally TierFold.onEdges = (_, _) => ()
-    assert(split == 0, s"$split minutes came from more than one fold task")
-    edges
   }
-
-  /** (level, source, bucket) of every bucket whose pieces came from at
-    * least two fold partitions: each partition it spans flags it an edge. */
-  private def cuts(edges: Seq[TierFold.Piece]): Set[(Int, String, Long)] =
-    edges.filter(_.edge).groupBy(p => (p.level, p.source, p.bucket))
-      .collect { case (k, ps) if ps.size >= 2 => k }.toSet
 
   /** Rows at `perMinute` seconds-spread slots of the given minutes of
     * hours 0, 5 and 23 on two days, for two sources; 2-20 tokens each. */
@@ -146,10 +130,7 @@ class TierFoldSpec extends AnyFunSuite with SparkSpec {
       spark.sparkContext.setLogLevel("ERROR")
       val tokens = frame(corpus(Seq(0, 1, 17, 30, 59), 12, tok))
       val root = Files.createTempDirectory("graft_fold").toString
-      val edges = withPartitions(16)(runJob(tokens,
-        RollupJob.Conf(tableRoot = root, scale = scale)))
-      val cut = cuts(edges).map(_._1)
-      assert(cut == Set(1, 2), s"cuts at levels $cut")
+      withPartitions(16)(runJob(tokens, RollupJob.Conf(tableRoot = root, scale = scale)))
       val got = tableStates(root)
       assertSame(got.take(1), Seq(driverMinutes(tokens, scale)), Tiers.take(1))
       assertLeftFolds(got)
@@ -169,10 +150,11 @@ class TierFoldSpec extends AnyFunSuite with SparkSpec {
     val clean = Files.createTempDirectory("graft_mixed_clean").toString
     val repaired = Files.createTempDirectory("graft_mixed_repair").toString
     val conf = RollupJob.Conf(tableRoot = clean, scale = scale, jobId = "j")
-    // the clean run cuts elsewhere (7 partitions), so equality also shows
-    // that the result does not depend on where the edges fall
+    // the clean run hashes over 7 partitions, the repair over 16, so
+    // equality also shows that the result does not depend on the
+    // partition count
     withPartitions(7)(runJob(both, conf))
-    val edges = withPartitions(16) {
+    withPartitions(16) {
       runJob(frame(dayB), conf.copy(tableRoot = repaired, tiers = Seq("1m" -> "1 minute")))
       // B's tokens are zeroed: a tier folded from its raw rows instead of
       // its committed 1m states would differ from the clean run
@@ -180,9 +162,6 @@ class TierFoldSpec extends AnyFunSuite with SparkSpec {
         .withColumn("tokens", transform(col("tokens"), x => x - x)))
       runJob(zeroedB, conf.copy(tableRoot = repaired))
     }
-    val dayBMicros = (T0 + 86400L) * 1000000L
-    assert(cuts(edges).exists { case (l, _, b) => l == 1 && b >= dayBMicros },
-      "no hour of the repair day was cut")
     val (a, b) = (new TableIO(clean), new TableIO(repaired))
     assert(b.doneBuckets("1h") == Set(T0, T0 + 86400L))
     for (t <- Tiers.flatMap(t => Seq(t, s"$t-chunks"))) {
@@ -204,19 +183,17 @@ class TierFoldSpec extends AnyFunSuite with SparkSpec {
     val tokens = frame(corpus(0 until 60, 4, full, seed = 13L))
     val inParts = tokens.rdd.getNumPartitions
     val runs = Seq(16, 5).map { n =>
-      // RangePartitioner samples ~3 x 20 x n / inParts rows per input
-      // partition; beyond that the bounds move with the sampler's seed
+      // more rows per input partition than a range sampler keeps (~3 x 20
+      // x n / inParts), so the equality also catches a partitioning whose
+      // bounds move with a sample's seed
       assert(tokens.count() / inParts > math.ceil(3.0 * 20 * n / inParts),
         "the input partitions must outgrow the sample")
       val root = Files.createTempDirectory(s"graft_fold_p$n").toString
-      val edges = withPartitions(n)(runJob(tokens,
-        RollupJob.Conf(tableRoot = root, scale = scale)))
-      (cuts(edges), tableStates(root))
+      withPartitions(n)(runJob(tokens, RollupJob.Conf(tableRoot = root, scale = scale)))
+      tableStates(root)
     }
-    assert(runs.forall(_._1.map(_._1) == Set(1, 2)) && runs(0)._1 != runs(1)._1,
-      s"cuts ${runs.map(_._1.size)}")
-    assertSame(runs(0)._2, runs(1)._2)
-    assertLeftFolds(runs(0)._2)
+    assertSame(runs(0), runs(1))
+    assertLeftFolds(runs(0))
   }
 }
 
